@@ -67,20 +67,24 @@ def holt(
     return fc, se
 
 
-def _fit_ar_ols(x: np.ndarray, p: int) -> tuple[np.ndarray, float, float]:
-    """AR(p) with intercept by least squares → (coefs, intercept, sigma)."""
+def _fit_ar_ols(
+    x: np.ndarray, p: int, sigma: bool = True
+) -> tuple[np.ndarray, float, float]:
+    """AR(p) with intercept by least squares → (coefs, intercept, sigma).
+    ``sigma=False`` skips the residual spread (returned as NaN) for
+    callers that use only the point forecast."""
     n = len(x)
     if p == 0 or n <= p + 1:
         mu = float(np.mean(x)) if n else 0.0
-        sigma = float(np.std(x - mu)) if n > 1 else 0.0
-        return np.zeros(p), mu, sigma
+        if not sigma:
+            return np.zeros(p), mu, float("nan")
+        return np.zeros(p), mu, float(np.std(x - mu)) if n > 1 else 0.0
     rows = [x[i : n - p + i] for i in range(p)]
     X = np.column_stack(list(reversed(rows)) + [np.ones(n - p)])
     y = x[p:]
     coef, *_ = np.linalg.lstsq(X, y, rcond=None)
-    resid = y - X @ coef
-    sigma = float(np.std(resid))
-    return coef[:p], float(coef[p]), sigma
+    spread = float(np.std(y - X @ coef)) if sigma else float("nan")
+    return coef[:p], float(coef[p]), spread
 
 
 def arima(
@@ -182,12 +186,44 @@ def walk_forward_mse(
     n_test = n_test or max(1, n // 4)
     if n - n_test < 3:
         return float("inf")
+    if model == "arima":
+        return _arima_walk_forward(np.asarray(x, dtype="float64"), n_test, **params)
     fn = MODELS[model]
     errs = []
     for i in range(n - n_test, n):
         fc, _ = fn(x[:i], 1, **params)
         errs.append((x[i] - fc[0]) ** 2)
     return float(np.mean(errs)) if errs else float("inf")
+
+
+def _arima_walk_forward(
+    x: np.ndarray, n_test: int, p: int = 1, d: int = 1, q: int = 0
+) -> float:
+    """``walk_forward_mse`` for ``arima``, bit-identical to refitting
+    ``arima(x[:i], 1, p, d, q)`` at every step: differencing a prefix
+    gives the prefix of the differenced series, so the series is
+    differenced once, and a one-step MSE never reads sigma, so it is not
+    computed. Each refit hands ``lstsq`` the same X and y as ``arima``
+    and replays its float operations in the same order."""
+    p = p + q
+    diffs = [x]
+    for _ in range(d):
+        diffs.append(np.diff(diffs[-1]))
+    n = len(x)
+    errs = []
+    for i in range(n - n_test, n):
+        # arima stops differencing once fewer than 2 values remain
+        k = min(d, max(0, i - 1))
+        work = diffs[k][: i - k]
+        coefs, fc, _ = _fit_ar_ols(work, p, sigma=False)
+        if p:
+            lags = [work[-j] if len(work) >= j else 0.0 for j in range(1, p + 1)]
+            fc = fc + float(np.dot(coefs, lags))
+        # integrate back: arima's tails are diffs[t][i - t - 1]
+        for t in reversed(range(k)):
+            fc = diffs[t][i - t - 1] + fc
+        errs.append((x[i] - fc) ** 2)
+    return float(np.mean(errs))
 
 
 def seasonal_decompose_additive(

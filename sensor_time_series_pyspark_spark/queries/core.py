@@ -606,8 +606,8 @@ def _q_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_arima_grid(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed (p,d,q) grid search (reference T6: the nested loop at
-    pandas_timeseries_forecast.py:22-55 re-shaped as a parameter
-    DataFrame → per-combo Arrow groups → min_by)."""
+    pandas_timeseries_forecast.py:22-55 re-shaped so each series group
+    scores every combo in one Python call and emits the winner)."""
     daily = _daily_series(spark, sf)
     grid = [
         {"p": 1, "d": 0, "q": 0},

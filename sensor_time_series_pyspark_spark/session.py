@@ -29,6 +29,18 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """Driver heap: env override, else a quarter of physical RAM (at
+    least 1g), which leaves room for the Python workers and for a
+    second driver JVM on the same host. A JVM sized past the host's RAM
+    with no swap behind it gets OOM-killed, not garbage-collected."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 4 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "sensor_time_series_pyspark_spark",
     master: str | None = None,
@@ -58,7 +70,7 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "131072")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     if master:
         builder = builder.master(master)

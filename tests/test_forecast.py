@@ -3,6 +3,7 @@ get metric-threshold + determinism checks instead of an oracle)."""
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -72,6 +73,40 @@ def test_walk_forward_prefers_right_model():
     assert mse_d1 < mse_d0  # trending series: differencing wins
 
 
+def _walk_forward_by_definition(x, g):
+    """The defining loop: refit ``arima`` on every expanding prefix."""
+    n = len(x)
+    n_test = max(1, n // 4)
+    if n - n_test < 3:
+        return float("inf")
+    errs = [(x[i] - arima(x[:i], 1, **g)[0][0]) ** 2 for i in range(n - n_test, n)]
+    return float(np.mean(errs))
+
+
+def test_walk_forward_arima_matches_defining_loop_exactly():
+    """The ARIMA walk-forward kernel differences once and skips sigma;
+    its MSE must still equal the refit-every-step loop bit for bit,
+    including the ``n - n_test < 3`` guard (short lengths) and the
+    ``len(work) < 2`` differencing stop (d = 2 on 3-point prefixes)."""
+    rng = np.random.default_rng(11)
+    lengths = list(range(1, 61)) + list(range(61, 400, 23)) + [400]
+    grid = [
+        {"p": p, "d": d, "q": q}
+        for p in (0, 1, 2) for d in (0, 1, 2) for q in (0, 1)
+    ]
+    for n in lengths:
+        series = [
+            np.cumsum(rng.normal(0, 3, n)) + rng.normal(0, 1, n),  # random walk
+            np.full(n, 4.0),  # constant: rank-deficient design
+            np.arange(n, dtype="float64") * 0.5,  # exact linear trend
+        ]
+        for x in series:
+            for g in grid:
+                got = walk_forward_mse(x, "arima", g)
+                want = _walk_forward_by_definition(x, g)
+                assert got == want or (math.isnan(got) and math.isnan(want)), (n, g, got, want)
+
+
 def test_seasonal_decompose_reconstruction():
     t = np.arange(56, dtype="float64")
     x = 0.5 * t + 3 * np.sin(2 * np.pi * t / 7)
@@ -119,6 +154,68 @@ def test_grid_search_picks_finite_best(series_df):
     assert len(rows) == 2
     for r in rows:
         assert math.isfinite(r["mse"]) and r["best_params"]
+
+
+def test_grid_search_tie_goes_to_last_combo(series_df):
+    """arima folds q into p, so (1,1,0) and (0,1,1) score the same MSE
+    exactly; the winner is the last of the tied combos in grid order."""
+    a, b = {"p": 1, "d": 1, "q": 0}, {"p": 0, "d": 1, "q": 1}
+    for grid in ([a, b], [b, a]):
+        rows = grid_search_forecast(series_df, ["user_id"], "day", "value", grid).collect()
+        assert len(rows) == 2
+        for r in rows:
+            assert r["best_params"] == json.dumps(grid[-1])
+            assert math.isfinite(r["mse"])
+
+
+def test_grid_search_nan_never_wins(series_df):
+    """A combo scoring NaN loses to any number, wherever it sits in the
+    grid; an all-NaN grid still emits one row per series."""
+    nan, ok = {"alpha": float("nan")}, {"alpha": 0.5}
+    for grid in ([nan, ok], [ok, nan]):
+        rows = grid_search_forecast(
+            series_df, ["user_id"], "day", "value", grid, model="holt"
+        ).collect()
+        assert len(rows) == 2
+        for r in rows:
+            assert r["best_params"] == json.dumps(ok) and math.isfinite(r["mse"])
+    rows = grid_search_forecast(
+        series_df, ["user_id"], "day", "value", [nan], model="holt"
+    ).collect()
+    # a NaN MSE crosses Arrow as null
+    assert len(rows) == 2
+    assert all(r["mse"] is None or math.isnan(r["mse"]) for r in rows)
+
+
+def test_grid_search_short_series_scores_inf(spark):
+    df = spark.createDataFrame(
+        [(1, d, float(d)) for d in range(3)], "user_id int, day int, value double"
+    )
+    grid = [{"p": 1, "d": 0, "q": 0}, {"p": 1, "d": 1, "q": 0}]
+    rows = grid_search_forecast(df, ["user_id"], "day", "value", grid).collect()
+    assert len(rows) == 1 and rows[0]["mse"] == float("inf")
+
+
+def test_forecast_calls_run_one_stage_on_every_core(spark):
+    """Many tiny series, which AQE alone would fold into one partition:
+    each public call still runs exactly one Python stage of
+    ``defaultParallelism`` tasks, behind a single shuffle and with no
+    cross join."""
+    rows = [(s, d, float((s * 7 + d) % 11)) for s in range(400) for d in range(8)]
+    df = spark.createDataFrame(rows, "user_id int, day int, value double")
+    grid = [{"p": 1, "d": 0, "q": 0}, {"p": 1, "d": 1, "q": 0}]
+    outs = {
+        "fit_forecast": fit_forecast(df, ["user_id"], "day", "value", horizon=2),
+        "grid_search_forecast": grid_search_forecast(df, ["user_id"], "day", "value", grid),
+        "decompose": decompose(df, ["user_id"], "day", "value", period=4),
+    }
+    cores = spark.sparkContext.defaultParallelism
+    for name, out in outs.items():
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FlatMapGroupsInPandas") == 1, name
+        assert plan.count("Exchange") == 1, name
+        assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan, name
+        assert out.rdd.getNumPartitions() == cores, name
 
 
 def test_statsmodels_parity_through_model_fn(spark, series_df):

@@ -132,7 +132,7 @@ def test_no_accidental_cartesian_products(spark):
     # three 1-row count frames combined into the report row
     SKIP |= {"q166_lsh_quality"}
     # ML/forecast paths run fit JOBS at plan-build time — skip the cost
-    SKIP |= {"q24_holt_forecast", "q25_arima_grid", "q26_seasonal_decompose",
+    SKIP |= {"q24_holt_forecast",
              "q27_mlp_classification", "q28_gbt_regression", "q43_model_metrics",
              "q47_ivf_topk"}
     # deliberate 1-row scalar broadcasts (global mean / sample totals /
