@@ -372,7 +372,6 @@ def bfs_hops(
     seed_col: str = "node",
     max_hops: int = 6,
     directed: bool = False,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Breadth-first hop distance from a seed set — multi-source BFS,
     the "how far is every node from the trusted core" primitive
@@ -393,10 +392,8 @@ def bfs_hops(
     is the only frame that grows transiently, and it is bounded by the
     per-level reachable set, never the full edge list.
 
-    ``checkpoint_every`` is DEPRECATED and ignored: every level is
-    eagerly checkpointed (round 10 — any sparser cadence nests the
-    between-checkpoint rounds quadratically). Kept for signature
-    compatibility only.
+    Every level is eagerly checkpointed: any sparser cadence nests the
+    between-checkpoint rounds quadratically.
 
     Output: node, hops (0 for seeds).
     """
@@ -435,7 +432,7 @@ def bfs_hops(
             # round-k plan re-executes rounds 1..k-1's joins inside
             # round k — the classic iterative-DataFrame blowup. One
             # eager localCheckpoint per level is the Pregel schedule;
-            # checkpoint_every > 1 only made the nesting quadratic
+            # a sparser cadence only made the nesting quadratic
             # between cuts.
             nxt = nxt.localCheckpoint(eager=True)
             visited = visited.unionByName(nxt)
@@ -454,7 +451,6 @@ def kcore(
     src_col: str = "src",
     dst_col: str = "dst",
     max_rounds: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly delete
     nodes of degree < k (with their edges) until the remaining
@@ -470,10 +466,9 @@ def kcore(
     bound. localCheckpoint cuts the iterative plan like pagerank /
     connected_components.
 
-    ``checkpoint_every`` is DEPRECATED and ignored: every peel round
-    is eagerly checkpointed (round 10 — the convergence count fully
-    evaluates each round anyway, so sparser cadences re-ran previous
-    peels inside it). Kept for signature compatibility only.
+    Every peel round is eagerly checkpointed: the convergence count
+    fully evaluates each round anyway, so sparser cadences re-ran
+    previous peels inside it.
 
     Output: (node, degree) for nodes in the k-core, with their degree
     WITHIN the core (>= k by construction).

@@ -308,7 +308,6 @@ def _q_weighted_median(spark: SparkSession, sf: str) -> DataFrame:
         ["l_returnflag"],
         "l_extendedprice",
         "l_quantity",
-        tiebreak_cols=["l_orderkey", "l_linenumber"],
     )
 
 

@@ -12,7 +12,6 @@ from .monitor import dropped_late_rows
 from .stateful import (
     ewma_anomaly_batch,
     ewma_anomaly_stream,
-    ewma_anomaly_stream_tws,
     heavy_hitters_batch,
     heavy_hitters_stream,
     page_hinkley_batch,
@@ -31,7 +30,6 @@ __all__ = [
     "dropped_late_rows",
     "ewma_anomaly_stream",
     "ewma_anomaly_batch",
-    "ewma_anomaly_stream_tws",
     "page_hinkley_stream",
     "page_hinkley_batch",
     "heavy_hitters_stream",

@@ -1,19 +1,35 @@
-"""Custom stateful streaming operator: online per-series EWMA +
-anomaly flagging via ``applyInPandasWithState`` (SURVEY.md §2.11 —
-"no custom state store needed until per-series online forecasting
-(applyInPandasWithState if wanted)": this is that operator).
+"""Custom stateful streaming operators: per-series folds that score
+every event live and agree exactly with their offline batch twins
+(SURVEY.md §2.11 — "no custom state store needed until per-series
+online forecasting (applyInPandasWithState if wanted)").
 
-Each series (e.g. one sensor/terminal) keeps (ewma, ewm_var, n) as
-GroupState across micro-batches; every incoming event is scored against
-the state BEFORE being folded in, so the output is identical whether
-rows arrive in one batch or many (tested in test_streaming.py). State is
-O(1) per series — safe for millions of series on a real cluster.
+Each recurrence (EWMA, Page-Hinkley, debounce, space-saving) is one
+pure step ``step(state, ts, *values) -> (state, out_row | None)``:
+``state`` is the O(1) per-series tuple that survives between events,
+and ``out_row`` holds the output columns after (key, ts), or None when
+the event emits nothing. Two private harnesses run a step over the rows
+of one key in ``ts`` order:
+
+- ``_fold_stream`` — the only ``applyInPandasWithState`` call: loads
+  the key's GroupState (or the step's initial state), folds every
+  micro-batch, saves the state, and drops it after
+  ``timeout_minutes`` of processing-time idleness.
+- ``_fold_batch`` — the only ``applyInPandas`` call, for the batch
+  twins. Batch needs its own harness because Spark rejects
+  ``applyInPandasWithState`` in a batch query.
+
+Every event is scored against the state BEFORE it is folded in, and
+both harnesses run the same step, so the output is identical whether
+rows arrive in one batch or many (tested in test_streaming.py).
+``debounce_batch`` keeps its Arrow fold over integer micros but takes
+its cooldown rule from the same debounce step.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -29,20 +45,126 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-STATE_SCHEMA = "ewma double, ewm_var double, n long"
+Step = Callable[..., tuple[tuple, "tuple | None"]]
 
 
-def _out_schema(key_fields: list[StructField]) -> StructType:
+def _out_schema(key_field: StructField, *fields: tuple[str, Any]) -> StructType:
     return StructType(
-        key_fields
-        + [
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-            StructField("ewma", DoubleType()),
-            StructField("zscore", DoubleType()),
-            StructField("n_seen", LongType()),
-        ]
+        [key_field, StructField("ts", TimestampType())]
+        + [StructField(name, dtype) for name, dtype in fields]
     )
+
+
+def _fold(
+    step: Step,
+    state: tuple,
+    key: Any,
+    pdf: pd.DataFrame,
+    ts_col: str,
+    value_cols: Sequence[str],
+) -> tuple[tuple, list[tuple]]:
+    """Run ``step`` over one key's rows in ``ts`` order; the rows to
+    emit are (key, ts, *out_row)."""
+    pdf = pdf.sort_values(ts_col)
+    rows = []
+    for ts, *values in zip(pdf[ts_col], *(pdf[c] for c in value_cols)):
+        state, out = step(state, ts, *values)
+        if out is not None:
+            rows.append((key, ts, *out))
+    return state, rows
+
+
+def _fold_stream(
+    sdf: DataFrame,
+    key_col: str,
+    ts_col: str,
+    value_cols: Sequence[str],
+    step: Step,
+    init: tuple,
+    state_schema: str,
+    out_schema: StructType,
+    timeout_minutes: int | None,
+) -> DataFrame:
+    def update(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            # idle series past timeout_minutes: drop the state so the
+            # store stays bounded; no output.
+            state.remove()
+            return
+        st = tuple(state.get) if state.exists else init
+        for pdf in pdfs:
+            st, rows = _fold(step, st, key[0], pdf, ts_col, value_cols)
+            if rows:
+                yield pd.DataFrame(rows, columns=out_schema.names)
+        state.update(st)
+        if timeout_minutes:
+            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+
+    timeout = (
+        GroupStateTimeout.ProcessingTimeTimeout
+        if timeout_minutes
+        else GroupStateTimeout.NoTimeout
+    )
+    return sdf.groupBy(key_col).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
+def _fold_batch(
+    df: DataFrame,
+    key_col: str,
+    ts_col: str,
+    value_cols: Sequence[str],
+    step: Step,
+    init: tuple,
+    out_schema: StructType,
+) -> DataFrame:
+    def fold(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
+        _, rows = _fold(step, init, key[0], pdf, ts_col, value_cols)
+        return pd.DataFrame(rows, columns=out_schema.names)
+
+    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
+
+
+# ---------------------------------------------------------------------------
+# EWMA + z-score
+# ---------------------------------------------------------------------------
+
+_EWMA_INIT = (0.0, 0.0, 0)
+STATE_SCHEMA = "ewma double, ewm_var double, n long"
+_EWMA_FIELDS = (
+    ("value", DoubleType()),
+    ("ewma", DoubleType()),
+    ("zscore", DoubleType()),
+    ("n_seen", LongType()),
+)
+
+
+def _ewma_step(state: tuple, ts: Any, v: Any, *, alpha: float):
+    """One EWMA update (Welford-style EWM, West 1979): the z-score uses
+    the state BEFORE the event. The IEEE operation order is fixed — the
+    q50 recursive-CTE oracle replicates it bit for bit."""
+    ewma, ewm_var, n = state
+    v = float(v)
+    if n == 0:
+        z = None
+        ewma, ewm_var = v, 0.0
+    else:
+        sd = math.sqrt(ewm_var)
+        z = (v - ewma) / sd if sd > 0 else None
+        delta = v - ewma
+        ewma = ewma + alpha * delta
+        ewm_var = (1 - alpha) * (ewm_var + alpha * delta * delta)
+    n += 1
+    return (ewma, ewm_var, n), (v, ewma, z, n)
 
 
 def ewma_anomaly_stream(
@@ -60,60 +182,10 @@ def ewma_anomaly_stream(
     a series' first event). Rows within a batch are processed in
     ``ts`` order; state carries over between micro-batches.
     """
-    key_field = sdf.schema[key_col]
-    out_schema = _out_schema([key_field])
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle series past timeout_minutes: drop the state so the
-            # store stays bounded (the docstring's contract); no output.
-            state.remove()
-            return
-        if state.exists:
-            ewma, ewm_var, n = state.get
-        else:
-            ewma, ewm_var, n = 0.0, 0.0, 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            out_rows = []
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                v = float(v)
-                if n == 0:
-                    z = None
-                    ewma, ewm_var = v, 0.0
-                else:
-                    sd = math.sqrt(ewm_var)
-                    z = (v - ewma) / sd if sd > 0 else None
-                    delta = v - ewma
-                    # Welford-style EWM update (West 1979): incremental,
-                    # O(1) state, no window buffer
-                    ewma = ewma + alpha * delta
-                    ewm_var = (1 - alpha) * (ewm_var + alpha * delta * delta)
-                n += 1
-                out_rows.append((key[0], ts, v, ewma, z, n))
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, "ts", "value", "ewma", "zscore", "n_seen"],
-            )
-        state.update((ewma, ewm_var, n))
-        if timeout_minutes:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_minutes
-        else GroupStateTimeout.NoTimeout
-    )
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _fold_stream(
+        sdf, key_col, ts_col, [value_col],
+        partial(_ewma_step, alpha=alpha), _EWMA_INIT, STATE_SCHEMA,
+        _out_schema(sdf.schema[key_col], *_EWMA_FIELDS), timeout_minutes,
     )
 
 
@@ -124,107 +196,12 @@ def ewma_anomaly_batch(
     value_col: str,
     alpha: float = 0.2,
 ) -> DataFrame:
-    """Batch twin of ``ewma_anomaly_stream`` (same math via
-    ``applyInPandas``) — used to assert stream == batch."""
-    key_field = df.schema[key_col]
-    out_schema = _out_schema([key_field])
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        ewma, ewm_var, n = 0.0, 0.0, 0
-        rows = []
-        for ts, v in zip(pdf[ts_col], pdf[value_col]):
-            v = float(v)
-            if n == 0:
-                z = None
-                ewma, ewm_var = v, 0.0
-            else:
-                sd = math.sqrt(ewm_var)
-                z = (v - ewma) / sd if sd > 0 else None
-                delta = v - ewma
-                ewma = ewma + alpha * delta
-                ewm_var = (1 - alpha) * (ewm_var + alpha * delta * delta)
-            n += 1
-            rows.append((pdf[key_col].iloc[0], ts, v, ewma, z, n))
-        return pd.DataFrame(
-            rows, columns=[key_col, "ts", "value", "ewma", "zscore", "n_seen"]
-        )
-
-    return df.groupBy(key_col).applyInPandas(score, schema=out_schema)
-
-
-def ewma_anomaly_stream_tws(
-    sdf: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    alpha: float = 0.2,
-    ttl_minutes: int | None = None,
-) -> DataFrame:
-    """``ewma_anomaly_stream`` on Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState``: typed state
-    variables through a ``StatefulProcessorHandle`` instead of one
-    opaque tuple, declarative per-state TTL instead of hand-rolled
-    timeout callbacks, and the RocksDB state store (set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    RocksDBStateStoreProvider — required by this API, and the right
-    store for millions of series anyway: state lives off-heap/on-disk
-    with incremental checkpoints).
-
-    Same math and output contract as ``ewma_anomaly_stream``; the
-    stream==batch equivalence test covers both implementations.
-
-    Dependency note: the API's driver worker speaks protobuf —
-    ``google.protobuf`` must be installed (the test suite skips this
-    path when it is absent).
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    key_field = sdf.schema[key_col]
-    out_schema = _out_schema([key_field])
-    ttl_ms = ttl_minutes * 60 * 1000 if ttl_minutes else None
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ewma_state", STATE_SCHEMA, ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                ewma, ewm_var, n = self._state.get()
-            else:
-                ewma, ewm_var, n = 0.0, 0.0, 0
-            for pdf in rows:
-                pdf = pdf.sort_values(ts_col)
-                out_rows = []
-                for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                    v = float(v)
-                    if n == 0:
-                        z = None
-                        ewma, ewm_var = v, 0.0
-                    else:
-                        sd = math.sqrt(ewm_var)
-                        z = (v - ewma) / sd if sd > 0 else None
-                        delta = v - ewma
-                        ewma = ewma + alpha * delta
-                        ewm_var = (1 - alpha) * (ewm_var + alpha * delta * delta)
-                    n += 1
-                    out_rows.append((key[0], ts, v, ewma, z, n))
-                yield pd.DataFrame(
-                    out_rows,
-                    columns=[key_col, "ts", "value", "ewma", "zscore", "n_seen"],
-                )
-            self._state.update((ewma, ewm_var, n))
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(key_col).transformWithStateInPandas(
-        _EwmaProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
+    """Batch twin of ``ewma_anomaly_stream`` (same ``_ewma_step`` fold
+    via ``applyInPandas``) — used to assert stream == batch."""
+    return _fold_batch(
+        df, key_col, ts_col, [value_col],
+        partial(_ewma_step, alpha=alpha), _EWMA_INIT,
+        _out_schema(df.schema[key_col], *_EWMA_FIELDS),
     )
 
 
@@ -232,40 +209,29 @@ def ewma_anomaly_stream_tws(
 # Page-Hinkley online drift detection
 # ---------------------------------------------------------------------------
 
+_PH_INIT = (0, 0.0, 0.0, 0.0)
 PH_STATE_SCHEMA = "n long, mean double, m double, m_min double"
+_PH_FIELDS = (
+    ("value", DoubleType()),
+    ("ph", DoubleType()),
+    ("alarm", LongType()),
+    ("n_seen", LongType()),
+)
 
 
-def _ph_out_schema(key_field: StructField) -> StructType:
-    return StructType(
-        [
-            key_field,
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-            StructField("ph", DoubleType()),
-            StructField("alarm", LongType()),
-            StructField("n_seen", LongType()),
-        ]
-    )
-
-
-def _ph_step(
-    x: float,
-    n: int,
-    mean: float,
-    m: float,
-    m_min: float,
-    delta: float,
-) -> tuple[int, float, float, float, float]:
+def _ph_step(state: tuple, ts: Any, x: Any, *, delta: float, threshold: float):
     """One online Page-Hinkley update (the river/MOA recurrence):
     incremental mean, cumulative deviation m += x - mean_t - delta
     (with the UPDATED mean, matching the canonical streaming form),
-    running minimum of m. Shared verbatim by the stream and the batch
-    twin so stream == batch is exact."""
+    running minimum of m; ph = m - min(m)."""
+    n, mean, m, m_min = state
+    x = float(x)
     n += 1
     mean = mean + (x - mean) / n
     m = m + (x - mean - delta)
     m_min = min(m_min, m)
-    return n, mean, m, m_min, m - m_min
+    ph = m - m_min
+    return (n, mean, m, m_min), (x, ph, int(ph > threshold), n)
 
 
 def page_hinkley_stream(
@@ -284,50 +250,11 @@ def page_hinkley_stream(
     query (which uses the whole-series mean; the online form uses the
     running mean, the standard stream variant). Rows within a batch
     process in ``ts`` order; state carries across micro-batches."""
-    key_field = sdf.schema[key_col]
-    out_schema = _ph_out_schema(key_field)
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            n, mean, m, m_min = state.get
-        else:
-            n, mean, m, m_min = 0, 0.0, 0.0, 0.0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            rows = []
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                n, mean, m, m_min, ph = _ph_step(
-                    float(v), n, mean, m, m_min, delta
-                )
-                rows.append(
-                    (key[0], ts, float(v), ph, int(ph > threshold), n)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[key_col, "ts", "value", "ph", "alarm", "n_seen"],
-            )
-        state.update((n, mean, m, m_min))
-        if timeout_minutes:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_minutes
-        else GroupStateTimeout.NoTimeout
-    )
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=PH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _fold_stream(
+        sdf, key_col, ts_col, [value_col],
+        partial(_ph_step, delta=delta, threshold=threshold), _PH_INIT,
+        PH_STATE_SCHEMA, _out_schema(sdf.schema[key_col], *_PH_FIELDS),
+        timeout_minutes,
     )
 
 
@@ -339,32 +266,31 @@ def page_hinkley_batch(
     delta: float = 0.0,
     threshold: float = 50.0,
 ) -> DataFrame:
-    """Batch twin of ``page_hinkley_stream`` (same ``_ph_step`` math
+    """Batch twin of ``page_hinkley_stream`` (same ``_ph_step`` fold
     via ``applyInPandas``) — used to assert stream == batch."""
-    key_field = df.schema[key_col]
-    out_schema = _ph_out_schema(key_field)
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        n, mean, m, m_min = 0, 0.0, 0.0, 0.0
-        rows = []
-        key = pdf[key_col].iloc[0]
-        for ts, v in zip(pdf[ts_col], pdf[value_col]):
-            n, mean, m, m_min, ph = _ph_step(float(v), n, mean, m, m_min, delta)
-            rows.append((key, ts, float(v), ph, int(ph > threshold), n))
-        return pd.DataFrame(
-            rows, columns=[key_col, "ts", "value", "ph", "alarm", "n_seen"]
-        )
-
-    return df.groupBy(key_col).applyInPandas(score, schema=out_schema)
+    return _fold_batch(
+        df, key_col, ts_col, [value_col],
+        partial(_ph_step, delta=delta, threshold=threshold), _PH_INIT,
+        _out_schema(df.schema[key_col], *_PH_FIELDS),
+    )
 
 
 # ---------------------------------------------------------------------------
 # debounce / rate limit
 # ---------------------------------------------------------------------------
 
-def _debounce_out_schema(df: DataFrame, key_col: str, ts_col: str) -> StructType:
-    return StructType([df.schema[key_col], df.schema[ts_col]])
+_DEBOUNCE_INIT = (None,)
+
+
+def _debounce_step(state: tuple, us: int | None, *, gap_us: int):
+    """One debounce update on epoch microseconds: emit iff at least
+    ``gap_us`` have passed since the last EMITTED event (the key's
+    first event always emits). A NULL timestamp (``us`` None) is
+    skipped and leaves the state alone."""
+    (last_us,) = state
+    if us is None or (last_us is not None and us - last_us < gap_us):
+        return state, None
+    return (us,), ()
 
 
 def debounce_stream(
@@ -384,45 +310,19 @@ def debounce_stream(
     so it is a stateful operator, not a window: GroupState holds one
     timestamp per key (O(1) state), rows process in ts order within a
     batch, and state carries across micro-batches so stream == batch
-    (tested). Output: the surviving (key, ts) rows.
+    (tested). Rows with a NULL timestamp are dropped, as in
+    ``debounce_batch``. Output: the surviving (key, ts) rows.
     """
-    out_schema = _debounce_out_schema(sdf, key_col, ts_col)
+    gap_us = cooldown_seconds * 1_000_000
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_us = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            keep_rows = []
-            for ts in pdf[ts_col]:
-                us = int(pd.Timestamp(ts).value) // 1000
-                if last_us is None or us - last_us >= cooldown_seconds * 1_000_000:
-                    keep_rows.append((key[0], ts))
-                    last_us = us
-            if keep_rows:
-                yield pd.DataFrame(keep_rows, columns=[key_col, ts_col])
-        if last_us is not None:
-            state.update((last_us,))
-        if timeout_minutes:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+    def step(state: tuple, ts: Any):
+        us = None if pd.isna(ts) else pd.Timestamp(ts).value // 1000
+        return _debounce_step(state, us, gap_us=gap_us)
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_minutes
-        else GroupStateTimeout.NoTimeout
-    )
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="last_us long",
-        outputMode="append",
-        timeoutConf=timeout,
+    return _fold_stream(
+        sdf, key_col, ts_col, [], step, _DEBOUNCE_INIT, "last_us long",
+        StructType([sdf.schema[key_col], sdf.schema[ts_col]]),
+        timeout_minutes,
     )
 
 
@@ -432,9 +332,9 @@ def debounce_batch(
     ts_col: str,
     cooldown_seconds: int,
 ) -> DataFrame:
-    """Batch twin of ``debounce_stream`` (same sequential fold) —
-    asserts stream == batch, and serves as the offline rate-limit pass
-    over historical archives.
+    """Batch twin of ``debounce_stream`` (same ``_debounce_step``
+    cooldown rule) — asserts stream == batch, and serves as the offline
+    rate-limit pass over historical archives.
 
     Python-boundary shape (guide §4): the per-key timestamp array is
     assembled in the JVM (collect_list + array_sort), the fold runs in
@@ -447,21 +347,17 @@ def debounce_batch(
     are dropped up front, so a key whose timestamps are ALL NULL is
     absent from the output. (collect_list already skipped NULLs; the
     explicit filter makes the behavior a documented contract rather
-    than an aggregate side effect. The pre-round-10 applyInPandas
-    path instead kept one NaT row per all-NULL key — undefined-order
-    dirty-data behavior nothing depended on.)"""
+    than an aggregate side effect.)"""
+    step = partial(_debounce_step, gap_us=cooldown_seconds * 1_000_000)
 
     @F.pandas_udf("array<int>")
     def keep_idx(us: pd.Series) -> pd.Series:
-        gap = cooldown_seconds * 1_000_000
-
         def one(u) -> list[int]:
-            out: list[int] = []
-            last = None
+            state, out = _DEBOUNCE_INIT, []
             for i, x in enumerate(u):
-                if last is None or x - last >= gap:
+                state, row = step(state, x)
+                if row is not None:
                     out.append(i)
-                    last = x
             return out
 
         return pd.Series([one(u) for u in us], dtype=object)
@@ -490,48 +386,37 @@ def debounce_batch(
 # streaming heavy hitters (space-saving)
 # ---------------------------------------------------------------------------
 
+_SS_INIT = ((), ())
 SS_STATE_SCHEMA = "items array<string>, counts array<long>"
+_SS_FIELDS = (
+    ("item", StringType()),
+    ("est_count", LongType()),
+    ("n_tracked", LongType()),
+)
 
 
-def _ss_out_schema(key_field: StructField) -> StructType:
-    return StructType(
-        [
-            key_field,
-            StructField("ts", TimestampType()),
-            StructField("item", StringType()),
-            StructField("est_count", LongType()),
-            StructField("n_tracked", LongType()),
-        ]
-    )
-
-
-def _ss_step(
-    item: str,
-    items: list[str],
-    counts: list[int],
-    capacity: int,
-) -> int:
+def _ss_step(state: tuple, ts: Any, item: Any, *, capacity: int):
     """One space-saving update (Metwally 2005): increment a tracked
     item, admit into spare capacity, or evict the minimum counter and
     inherit its count + 1 (the overestimate bound). Deterministic
     eviction: smallest count, then lexicographically smallest item.
-    Returns the item's current estimate. Shared by stream and batch
-    twin so stream == batch is exact."""
+    Emits the item's current estimate."""
+    items, counts = list(state[0]), list(state[1])
+    item = str(item)
     if item in items:
         i = items.index(item)
         counts[i] += 1
-        return counts[i]
-    if len(items) < capacity:
+    elif len(items) < capacity:
         items.append(item)
         counts.append(1)
-        return 1
-    m = min(counts)
-    # deterministic tiebreak among minimum counters
-    cand = sorted(it for it, c in zip(items, counts) if c == m)[0]
-    i = items.index(cand)
-    items[i] = item
-    counts[i] = m + 1
-    return counts[i]
+        i = len(items) - 1
+    else:
+        m = min(counts)
+        # deterministic tiebreak among minimum counters
+        i = items.index(min(it for it, c in zip(items, counts) if c == m))
+        items[i] = item
+        counts[i] = m + 1
+    return (items, counts), (item, counts[i], len(items))
 
 
 def heavy_hitters_stream(
@@ -549,47 +434,10 @@ def heavy_hitters_stream(
     question offline — this is the live path). Emits each event's
     running estimate; rows within a batch process in ts order and
     state carries across micro-batches."""
-    key_field = sdf.schema[key_col]
-    out_schema = _ss_out_schema(key_field)
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            items, counts = state.get
-            items, counts = list(items), list(counts)
-        else:
-            items, counts = [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            rows = []
-            for ts, it in zip(pdf[ts_col], pdf[item_col]):
-                est = _ss_step(str(it), items, counts, capacity)
-                rows.append((key[0], ts, str(it), est, len(items)))
-            yield pd.DataFrame(
-                rows,
-                columns=[key_col, "ts", "item", "est_count", "n_tracked"],
-            )
-        state.update((items, counts))
-        if timeout_minutes:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_minutes
-        else GroupStateTimeout.NoTimeout
-    )
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=SS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _fold_stream(
+        sdf, key_col, ts_col, [item_col],
+        partial(_ss_step, capacity=capacity), _SS_INIT, SS_STATE_SCHEMA,
+        _out_schema(sdf.schema[key_col], *_SS_FIELDS), timeout_minutes,
     )
 
 
@@ -602,20 +450,8 @@ def heavy_hitters_batch(
 ) -> DataFrame:
     """Batch twin of ``heavy_hitters_stream`` (same ``_ss_step`` fold
     via ``applyInPandas``) — used to assert stream == batch."""
-    key_field = df.schema[key_col]
-    out_schema = _ss_out_schema(key_field)
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        items: list[str] = []
-        counts: list[int] = []
-        rows = []
-        key = pdf[key_col].iloc[0]
-        for ts, it in zip(pdf[ts_col], pdf[item_col]):
-            est = _ss_step(str(it), items, counts, capacity)
-            rows.append((key, ts, str(it), est, len(items)))
-        return pd.DataFrame(
-            rows, columns=[key_col, "ts", "item", "est_count", "n_tracked"]
-        )
-
-    return df.groupBy(key_col).applyInPandas(score, schema=out_schema)
+    return _fold_batch(
+        df, key_col, ts_col, [item_col],
+        partial(_ss_step, capacity=capacity), _SS_INIT,
+        _out_schema(df.schema[key_col], *_SS_FIELDS),
+    )

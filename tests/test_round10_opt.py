@@ -26,13 +26,6 @@ from sensor_time_series_pyspark_spark.operators.rainflow import (
 )
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from sensor_time_series_pyspark_spark.session import get_spark
-
-    return get_spark("test_round10_opt", shuffle_partitions=4)
-
-
 DOCS = [
     (1, "a b c d e f g a b c d e"),
     (2, "x a b c d e y"),

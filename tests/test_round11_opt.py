@@ -18,15 +18,7 @@ performance keep their observable semantics.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from sensor_time_series_pyspark_spark.session import get_spark
-
-    return get_spark("test-round11-opt")
 
 
 # ------------------------------------------------------ tfidf prefix filter

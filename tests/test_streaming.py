@@ -358,45 +358,6 @@ def test_stream_stream_interval_join_matches_batch(spark, stream_src):
     assert got.exceptAll(batch).count() == 0
 
 
-def test_tws_ewma_stream_matches_batch(spark, two_phase_src):
-    """transformWithStateInPandas (Spark 4 successor API, RocksDB state
-    store) must produce the identical fold as applyInPandasWithState
-    and the batch twin."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas needs protobuf (absent here)",
-    )
-    from sensor_time_series_pyspark_spark.streaming import ewma_anomaly_stream_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        path, schema = two_phase_src
-        sdf = read_stream(spark, path, schema, fmt="parquet", max_files_per_trigger=1)
-        scored = ewma_anomaly_stream_tws(sdf, "user_id", "ts", "value", alpha=0.2)
-        run_to_memory(scored, "ewma_tws")
-        got = {
-            (r["user_id"], r["ts"]): (r["ewma"], r["zscore"], r["n_seen"])
-            for r in spark.table("ewma_tws").collect()
-        }
-        batch = ewma_anomaly_batch(
-            read_table(spark, SF, "events"), "user_id", "ts", "value", alpha=0.2
-        )
-        want = {
-            (r["user_id"], r["ts"]): (r["ewma"], r["zscore"], r["n_seen"])
-            for r in batch.collect()
-        }
-        assert got == want
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_debounce_stream_matches_batch(spark, two_phase_src):
     from sensor_time_series_pyspark_spark.streaming.stateful import (
         debounce_batch,
@@ -415,6 +376,120 @@ def test_debounce_stream_matches_batch(spark, two_phase_src):
     )
     want = {(r["user_id"], r["ts"]) for r in batch.collect()}
     assert got == want and len(want) > 0
+
+
+def test_debounce_stream_drops_null_timestamps_like_batch(spark, tmp_path):
+    """A key whose only timestamp is NULL emits nothing in the stream,
+    as in debounce_batch (NULL-timestamp rows are dropped)."""
+    from sensor_time_series_pyspark_spark.streaming.stateful import (
+        debounce_batch,
+        debounce_stream,
+    )
+
+    df = spark.createDataFrame(
+        [("a", "2024-01-01 00:00:00"), ("a", "2024-01-01 02:00:00"), ("b", None)],
+        "k string, ts string",
+    ).select("k", F.col("ts").cast("timestamp").alias("ts"))
+    d = str(tmp_path / "src")
+    df.write.parquet(d)
+    sdf = read_stream(spark, d, df.schema, fmt="parquet")
+    run_to_memory(
+        debounce_stream(sdf, "k", "ts", cooldown_seconds=3600),
+        "debounce_null_t",
+    )
+    got = sorted(
+        (r["k"], r["ts"]) for r in spark.table("debounce_null_t").collect()
+    )
+    want = sorted(
+        (r["k"], r["ts"])
+        for r in debounce_batch(df, "k", "ts", cooldown_seconds=3600).collect()
+    )
+    assert got == want and len(want) == 2
+
+
+class _CaptureGroupBy:
+    """Stands in for a streaming DataFrame: records the per-group
+    function and options an operator hands to applyInPandasWithState."""
+
+    def __init__(self, schema):
+        self.schema = schema
+
+    def groupBy(self, *cols):
+        return self
+
+    def applyInPandasWithState(self, func, **kwargs):
+        self.func, self.kwargs = func, kwargs
+        return self
+
+
+class _StubGroupState:
+    def __init__(self, timed_out: bool):
+        self.hasTimedOut = timed_out
+        self.exists = False
+        self.calls: list[tuple] = []
+
+    def remove(self):
+        self.calls.append(("remove",))
+
+    def update(self, value):
+        self.calls.append(("update",))
+
+    def setTimeoutDuration(self, ms):
+        self.calls.append(("setTimeoutDuration", ms))
+
+
+@pytest.mark.parametrize(
+    "op, args",
+    [
+        ("ewma_anomaly_stream", ("value",)),
+        ("page_hinkley_stream", ("value",)),
+        ("heavy_hitters_stream", ("item",)),
+        ("debounce_stream", (60,)),
+    ],
+)
+def test_stream_harness_timeout_branch(op, args):
+    """Every stream operator runs the shared GroupState loop: a timed-out
+    group drops its state and emits nothing; otherwise the idle timeout
+    is re-armed after the state is saved."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import (
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from sensor_time_series_pyspark_spark.streaming import stateful
+
+    schema = StructType(
+        [
+            StructField("k", StringType()),
+            StructField("ts", TimestampType()),
+            StructField("value", DoubleType()),
+            StructField("item", StringType()),
+        ]
+    )
+    pdf = pd.DataFrame(
+        {
+            "k": ["a", "a"],
+            "ts": pd.to_datetime(["2024-01-01 00:00", "2024-01-01 00:05"]),
+            "value": [1.0, 2.0],
+            "item": ["x", "y"],
+        }
+    )
+    sdf = _CaptureGroupBy(schema)
+    getattr(stateful, op)(sdf, "k", "ts", *args, timeout_minutes=5)
+    assert sdf.kwargs["timeoutConf"] == GroupStateTimeout.ProcessingTimeTimeout
+
+    timed_out = _StubGroupState(timed_out=True)
+    assert list(sdf.func(("a",), iter([pdf]), timed_out)) == []
+    assert timed_out.calls == [("remove",)]
+
+    live = _StubGroupState(timed_out=False)
+    assert len(list(sdf.func(("a",), iter([pdf]), live))) == 1
+    assert live.calls == [("update",), ("setTimeoutDuration", 300000)]
 
 
 def test_debounce_batch_semantics(spark):
