@@ -24,11 +24,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sensor_time_series_pyspark_spark.plans import sensor_etl
 from sensor_time_series_pyspark_spark.queries import ORACLE_SQL, QUERIES
-# compat re-exports: helpers (_dsum/_davg/_dec, read_table, …) keep
-# their historical `__spark_entry__.<name>` addresses
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
-from sensor_time_series_pyspark_spark.queries.common import SF0001  # noqa: F401
+from sensor_time_series_pyspark_spark.queries.common import SF0001
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -13,8 +13,8 @@ round 8 was whether the 10x/second-decade corpora flip the verdict at
 either threshold. Both strategies return identical rows (equivalence
 pinned by tests/test_dedup_clusters.py), so only wall time is raced.
 
-Methodology matches scripts/scaling_curve.py: load-gated legs, one
-warm-up per dataset, best-of-N noop sinks.
+Methodology: load-gated legs (each waits for load1 < 2), one warm-up
+per dataset, best-of-N noop sinks.
 
 Usage: python scripts/race_jaccard.py [--repeats N] [--out FILE]
 """
@@ -33,9 +33,6 @@ from sensor_time_series_pyspark_spark.operators import (
 from sensor_time_series_pyspark_spark.queries.common import _rep_docs
 from sensor_time_series_pyspark_spark.session import get_spark
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from scaling_curve import wait_for_idle  # noqa: E402
-
 LEGS = [
     ("sf0.1", "/root/testdata/sf0.1"),
     ("scale10", "/tmp/scale10"),
@@ -43,6 +40,23 @@ LEGS = [
 ]
 THRESHOLDS = [0.2, 0.5]  # q19's own setting + the high-t regime
 SHINGLE_K = 3
+
+
+def wait_for_idle(max_load: float, timeout_s: float) -> float:
+    """Block until load1 < max_load (or timeout); return the load1 the
+    leg actually ran at, so legs stay comparable across runs."""
+    deadline = time.monotonic() + timeout_s
+    load1 = os.getloadavg()[0]
+    while load1 >= max_load and time.monotonic() < deadline:
+        time.sleep(10.0)
+        load1 = os.getloadavg()[0]
+    if load1 >= max_load:
+        print(
+            f"WARNING leg starting at load1={load1:.2f} >= {max_load} "
+            f"after {timeout_s:.0f}s wait",
+            file=sys.stderr,
+        )
+    return round(load1, 2)
 
 
 def build(strategy, spark, sf_dir, t):

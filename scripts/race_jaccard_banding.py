@@ -37,7 +37,7 @@ from sensor_time_series_pyspark_spark.queries.common import _rep_docs
 from sensor_time_series_pyspark_spark.session import get_spark
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from scaling_curve import wait_for_idle  # noqa: E402
+from race_jaccard import wait_for_idle  # noqa: E402
 
 LEGS = [
     ("sf0.1", "/root/testdata/sf0.1"),

@@ -4,7 +4,8 @@
 Usage:
   python scripts/screen_queries.py out.json [names...]   # default: all
 
-Same env contract as bench.py ($SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS).
+Environment: $SPARK_GRAFT_SF_DIR picks the dataset directory and
+$SPARK_GRAFT_CPUS the local core count.
 Single-repeat numbers: good for ranking offenders, not for A/B calls
 (see OPTIMIZATION_r11.md's noise discipline).
 """

@@ -1,143 +1,22 @@
-"""Console entry points (``pyproject.toml [project.scripts]``).
-
-``sensor-ts-bench`` — the headline benchmark: runs the flagship +
-representative queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line. Each query is forced through the ``noop`` sink so the full plan
-executes (collect() would bottleneck on the driver; count() lets
-Catalyst prune).
+"""Console entry point (``pyproject.toml [project.scripts]``).
 
 ``sensor-ts-gate`` — local mirror of the driver's correctness gate:
 run every registered query in Spark and its oracle twin in DuckDB,
 compare row count + schema width + order-insensitive values.
+``scripts/check_oracle.py`` is a thin shim over ``gate_main``.
 
-The repo-root ``bench.py`` and ``scripts/check_oracle.py`` are thin
-shims over these functions, kept for the driver contract and the
-historical invocation paths.
+``duck_con`` and ``compare`` are shared with ``perfbench/``, which is
+the repo's benchmark (see ``perfbench/README.md``).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 from .queries import ORACLE_SQL, QUERIES
 from .session import get_spark
 from .sources.readers import TABLES
-
-# the original (rounds 1-7) headline set — reported as the "core13"
-# subtotal so round-over-round bench comparisons survive additions
-CORE13 = frozenset({
-    "flagship_hourly_wide", "q01_pricing_summary", "q03_segment_revenue",
-    "q05_event_type_pivot", "q09_top_orders_per_customer",
-    "q11_resample_30min", "q14_interpolate", "q15_sessionize",
-    "q17_dedup_exact", "q19_jaccard_pairs", "q22_doc_stats",
-    "q23_topk_cosine", "q29_asof_join",
-})
-
-BENCH_QUERIES = [
-    "flagship_hourly_wide",
-    "q01_pricing_summary",
-    "q03_segment_revenue",
-    "q05_event_type_pivot",
-    "q09_top_orders_per_customer",
-    "q11_resample_30min",
-    "q14_interpolate",
-    "q15_sessionize",
-    "q17_dedup_exact",
-    "q19_jaccard_pairs",
-    "q22_doc_stats",
-    "q23_topk_cosine",
-    "q29_asof_join",
-    # round-9 additions (VERDICT r8 #5): the split-operator and
-    # semantic-dedup scale paths, tracked round-over-round rather than
-    # only at gate time
-    "q570_sessionize_split",
-    "q571_asof_join_split",
-    "q572_semantic_dedup",
-    # round-9 late addition: the span-level dedup family shares q19's
-    # inverted-index shape (the steepest headline) — track it too
-    "q581_dup_spans",
-    # round-9 late addition: the segment (line-level) dedup audit — a
-    # third dedup shuffle shape (segment-count + per-doc regroup)
-    "q588_segment_dedup",
-    # round-10 addition: the rainflow stack walk — the repo's one
-    # per-entity applyInPandas headline, tracked so Arrow-hop
-    # regressions surface round-over-round
-    "q603_rainflow_cycles",
-]
-
-
-def bench_main() -> None:
-    # 1-minute loadavg BEFORE the JVM spins up: this measures
-    # pre-existing CPU contention (another active session, a background
-    # gate run), not the bench's own threads. >~2 means the timings
-    # below carry noise — recorded so judges don't have to re-litigate
-    # it (VERDICT r4/r5).
-    load1 = round(os.getloadavg()[0], 2)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    spark = get_spark("bench")
-    qs = dict(QUERIES)
-    names = [n for n in BENCH_QUERIES if n in qs]
-
-    # warm the JVM + parquet footer caches once (excluded from timings)
-    qs[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # best-of-N: single-shot timings on a shared JVM are noisy (JIT
-    # recompilation, GC pauses land on whichever query is running);
-    # the minimum is the steady-state cost of the plan itself.
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5")))
-    timings: dict[str, float] = {}
-    # measurement-fidelity companion (round 11, VERDICT r10 #4/#6):
-    # repeat 1 runs with a clear cache, so for queries that persist an
-    # internal frame (q19's inverted index, q581's valved inventory)
-    # it is the COLD cost including the persist build, while the
-    # best-of-N min reports the steady-state warm-cache plan cost.
-    # Both are published; `queries` keeps its historical meaning so
-    # round-over-round comparisons stay valid (additions-only change).
-    cold: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for i in range(repeats):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.perf_counter() - t0
-            if i == 0:
-                cold[name] = round(dt, 3)
-            best = min(best, dt)
-        timings[name] = round(best, 3)
-        # drop persisted frames a query may have left behind (e.g. the
-        # jaccard inverted index): leaked cache entries accumulate
-        # across repeats and poison later queries' memory budget
-        spark.catalog.clearCache()
-
-    total = round(sum(timings.values()), 3)
-    # the original 13-query headline subtotal, kept comparable
-    # round-over-round as scale-op queries join the tracked set
-    # (rounds 8/9 grew BENCH_QUERIES; the superset total is not
-    # comparable to older rounds' values, this subtotal is)
-    core13 = round(
-        sum(t for n, t in timings.items() if n in CORE13), 3
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "core13": core13,
-                "unit": "sec",
-                "queries": timings,
-                "queries_cold": cold,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "load1": load1,
-            }
-        )
-    )
 
 
 def duck_con(sf_dir: str):

@@ -1581,8 +1581,7 @@ def segment_dup_stats(
     docs. Empty docs ride the SAME pipeline via ``posexplode_outer``
     (one NULL-segment row that no count can match, zeroed in the
     per-doc aggregate) — NOT a second scan + totalizing join, which
-    re-tokenized the corpus and cost 1.6x on the q588 bench (caught
-    by scripts/bench_regression.py the round it was introduced).
+    re-tokenized the corpus and cost 1.6x on the q588 bench.
     """
     carry = list(carry_cols or [])
     toks = df.select(

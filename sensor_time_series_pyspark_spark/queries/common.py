@@ -577,7 +577,6 @@ __all__ = [
     '_NDCG_DISC',
     '_NDCG_CUM',
     '_NPV_DISC_SCALED',
-    '_math',
     '_SPRT_L1',
     '_SPRT_L0',
     '_SPRT_UP',
@@ -590,7 +589,6 @@ __all__ = [
     '_thr',
     '_REV_SQL',
     '_davg_sql',
-    '_pivot_avg_sql',
     '_FLAGSHIP_SQL',
     '_PIVOT_SQL',
     '_SESSIONIZE_SQL',

@@ -8,7 +8,9 @@ operators, and an idempotent foreachBatch parquet sink).
 Scale notes:
 - watermark bounds state: without it a windowed agg keeps every window
   open forever (OOM at 100 TB/day ingest). Callers must pass a
-  lateness budget explicitly.
+  lateness budget explicitly. Operators chain (e.g. stream_dedup ->
+  windowed_agg): each reuses an upstream watermark of the same delay
+  and raises ValueError on a different one.
 - the parquet sink partitions by window date so downstream batch reads
   get partition pruning for free.
 - `availableNow` trigger = batch-sized catch-up runs with streaming
@@ -23,6 +25,31 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+# Spark stamps the event-time column with its watermark delay (ms) and
+# keeps the stamp through later operators, dropDuplicatesWithinWatermark
+# included.
+_DELAY_KEY = "spark.watermarkDelayMs"
+
+
+def _with_watermark(sdf: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+    """``sdf`` with a ``watermark`` lateness budget on ``ts_col``.
+
+    An upstream operator may already have set one (Spark refuses to
+    redefine it at query start): an equal delay is reused, a different
+    one raises ``ValueError`` naming both.
+    """
+    marked = sdf.withWatermark(ts_col, watermark)
+    have = sdf.schema[ts_col].metadata.get(_DELAY_KEY)
+    if have is None:
+        return marked
+    want = marked.schema[ts_col].metadata[_DELAY_KEY]
+    if have != want:
+        raise ValueError(
+            f"{ts_col!r} already has a {have} ms watermark; "
+            f"cannot redefine it as {watermark!r} ({want} ms)"
+        )
+    return sdf
 
 
 def read_stream(
@@ -59,7 +86,7 @@ def windowed_agg(
     streaming twin of operators/resample.py:resample; identical output
     schema (`bucket` = window start) so batch and streaming results are
     interchangeable."""
-    withmark = sdf.withWatermark(ts_col, watermark)
+    withmark = _with_watermark(sdf, ts_col, watermark)
     win = F.window(ts_col, width, slide or width)
     return (
         withmark.groupBy(win.alias("__w"), *keys)
@@ -80,7 +107,7 @@ def session_agg(
     """Gap-based session windows (streaming twin of
     operators/sessionize.py — F.session_window keeps per-key session
     state and emits on watermark close)."""
-    withmark = sdf.withWatermark(ts_col, watermark)
+    withmark = _with_watermark(sdf, ts_col, watermark)
     sw = F.session_window(ts_col, gap)
     out_aggs = list(aggs) or [F.count(F.lit(1)).alias("n_events")]
     return (
@@ -114,7 +141,7 @@ def stream_dedup(
     fingerprint64 of the payload) — never include the arrival
     timestamp itself.
     """
-    return sdf.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return _with_watermark(sdf, ts_col, watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
 

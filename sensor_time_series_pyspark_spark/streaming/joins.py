@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ingest import _with_watermark
+
 
 def stream_interval_join(
     left: DataFrame,
@@ -37,8 +39,8 @@ def stream_interval_join(
     left_outer (outer emits only after watermark passes — late rows
     with no match surface with NULL right columns).
     """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
+    lw = _with_watermark(left, left_ts, watermark)
+    rw = _with_watermark(right, right_ts, watermark)
     cond = F.lit(True)
     for k in keys:
         cond = cond & (lw[k] == rw[k])

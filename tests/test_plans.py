@@ -19,6 +19,28 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+class _Built(dict):
+    """Registered query name -> its DataFrame, built on first lookup.
+    The registry-wide gates share it, so each query is planned once per
+    module (Spark caches the optimized and executed plan on the frame)."""
+
+    def __init__(self, spark):
+        super().__init__()
+        self._spark = spark
+        self._queries = entrymod.queries()
+
+    def __missing__(self, name):
+        df = self[name] = self._queries[name](self._spark, SF)
+        return df
+
+
+@pytest.fixture(scope="module")
+def built(spark):
+    frames = _Built(spark)
+    yield frames
+    frames.clear()
+
+
 def test_flagship_uses_broadcast_joins(spark):
     df = entrymod.entry(spark)
     plan = plan_of(df)
@@ -37,7 +59,7 @@ def test_filter_pushdown_reaches_parquet(spark):
     assert "ReadSchema" in plan
 
 
-def test_relational_queries_stay_jvm_side(spark):
+def test_relational_queries_stay_jvm_side(built):
     """No Python evaluation (BatchEvalPython/ArrowEvalPython/
     FlatMapGroupsInPandas/MapInArrow) in any SQL-oracled query: UDFs
     are quarantined to the forecast/decode paths. Allowlist — each
@@ -95,13 +117,12 @@ def test_relational_queries_stay_jvm_side(spark):
     }
     markers = ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
                "MapInPandas")
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     offenders = []
-    for name in qs:
+    for name in entrymod.queries():
         if name not in oracles:
             continue
-        plan = plan_of(qs[name](spark, SF))
+        plan = plan_of(built[name])
         if name not in allow and any(m in plan for m in markers):
             offenders.append(name)
         if name not in allow_grouped and name not in allow and (
@@ -111,7 +132,7 @@ def test_relational_queries_stay_jvm_side(spark):
     assert not offenders, f"Python in relational plans: {offenders}"
 
 
-def test_no_accidental_cartesian_products(spark):
+def test_no_accidental_cartesian_products(built):
     """No relational query may plan a cartesian/nested-loop join.
     Allowlist: the exact brute-force pair generators, whose O(n²) is
     the declared semantics (candidates for them come from LSH at
@@ -243,12 +264,11 @@ def test_no_accidental_cartesian_products(spark):
     # q157 shape on the post-aggregate label centroids; the fact only
     # feeds the ONE hash aggregate below it)
     SKIP |= {"q592_label_centroid_sim"}
-    qs = entrymod.queries()
     offenders = []
-    for name, fn in qs.items():
+    for name in entrymod.queries():
         if name in SKIP:
             continue
-        plan = plan_of(fn(spark, SF))
+        plan = plan_of(built[name])
         if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
             offenders.append(name)
     assert not offenders, f"cartesian joins in: {offenders}"
@@ -523,7 +543,7 @@ def test_headline_shuffle_budgets(spark):
     assert not over, f"shuffle budget exceeded: {over}"
 
 
-def test_global_windows_sit_above_aggregates_or_are_reviewed(spark):
+def test_global_windows_sit_above_aggregates_or_are_reviewed(built):
     """SURVEY §8 bug 8 (the reference's empty ``Window.partitionBy()``
     funnels the whole dataset through ONE task): suite-wide gate that
     walks every registered query's optimized plan and asserts every
@@ -580,13 +600,12 @@ def test_global_windows_sit_above_aggregates_or_are_reviewed(spark):
         "q27_mlp_classification", "q28_gbt_regression", "q43_model_metrics",
         "q47_ivf_topk", "q190_pq_topk", "q197_als_recs", "q509_kmeans_lloyd",
     }
-    qs = entrymod.queries()
     offenders = []
-    for name, fn in qs.items():
+    for name in entrymod.queries():
         if name in COST_SKIP:
             continue
         nodes = json.loads(
-            fn(spark, SF)._jdf.queryExecution().optimizedPlan().toJSON()
+            built[name]._jdf.queryExecution().optimizedPlan().toJSON()
         )
         raw = False
         for i, nd in enumerate(nodes):

@@ -1,80 +1,7 @@
-"""Round-10 additions: the bench regression gate (pure JSON, no
-Spark), the banding-first jaccard dispatcher, and promotions of
-rows-only queries to hash-gated oracles."""
+"""Round-10 additions: the banding-first jaccard dispatcher and
+promotions of rows-only queries to hash-gated oracles."""
 
 from __future__ import annotations
-
-import glob
-import json
-import os
-import subprocess
-import sys
-import tempfile
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-GATE = os.path.join(REPO, "scripts", "bench_regression.py")
-
-
-def _best_recorded():
-    best = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json"))):
-        payload = json.load(open(f))
-        parsed = payload.get("parsed", payload)
-        for q, s in parsed.get("queries", {}).items():
-            best[q] = min(best.get(q, float("inf")), s)
-    return best
-
-
-def _run_gate(current, extra=()):
-    with tempfile.NamedTemporaryFile(
-        "w", suffix=".json", delete=False
-    ) as fh:
-        json.dump(current, fh)
-        path = fh.name
-    try:
-        return subprocess.run(
-            [sys.executable, GATE, "--current", path, *extra],
-            capture_output=True, text=True, timeout=120,
-        )
-    finally:
-        os.unlink(path)
-
-
-def test_bench_regression_gate_passes_on_best_recorded():
-    best = _best_recorded()
-    assert best, "no BENCH_r*.json recorded"
-    r = _run_gate({"queries": best, "load1": 0.1})
-    assert r.returncode == 0, r.stdout
-    assert "PASS" in r.stdout
-
-
-def test_bench_regression_gate_fails_on_2x_regression():
-    best = _best_recorded()
-    q = sorted(best)[0]
-    cur = dict(best)
-    cur[q] = best[q] * 2.0
-    r = _run_gate({"queries": cur, "load1": 0.1})
-    assert r.returncode == 1
-    assert q in r.stdout and "REGRESSED" in r.stdout
-
-
-def test_bench_regression_gate_skips_loaded_runs():
-    # a loaded machine can't distinguish regression from contention —
-    # the gate must skip (exit 0, SKIPPED marker), never false-alarm
-    best = _best_recorded()
-    cur = {q: s * 3.0 for q, s in best.items()}
-    r = _run_gate({"queries": cur, "load1": 9.9})
-    assert r.returncode == 0
-    assert "SKIPPED" in r.stdout
-
-
-def test_bench_regression_gate_tolerates_new_queries():
-    best = _best_recorded()
-    cur = dict(best)
-    cur["q999_not_yet_recorded"] = 42.0
-    r = _run_gate({"queries": cur, "load1": 0.1})
-    assert r.returncode == 0, r.stdout
-    assert "new" in r.stdout
 
 
 # ---- jaccard auto-dispatch (inverted vs banding-first) ------------------

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -285,6 +286,66 @@ def test_stream_dedup_matches_batch(spark, tmp_path_factory):
     assert got == ev.select("event_id").distinct().count()
 
 
+def test_stream_dedup_then_windowed_agg_matches_batch(spark, tmp_path):
+    """stream_dedup -> windowed_agg composes: the second operator reuses
+    the watermark the first declared, and the closed windows equal the
+    batch exact_dedup -> resample over the same events. Asking for a
+    different delay downstream raises."""
+    from datetime import datetime
+
+    from sensor_time_series_pyspark_spark.operators import exact_dedup
+    from sensor_time_series_pyspark_spark.streaming import stream_dedup
+
+    t = lambda h, m: datetime(2024, 3, 1, h, m)  # noqa: E731
+    schema = "eid bigint, ts timestamp, k string, value double"
+    # the third drop replays event 1 while it is still within the
+    # watermark (10:50 - 1 hour), then 13:00 closes every earlier window
+    drops = [
+        [(1, t(10, 5), "a", 1.0), (2, t(10, 20), "b", 2.0)],
+        [(3, t(10, 40), "a", 4.0), (4, t(10, 50), "b", 8.0)],
+        [(1, t(10, 5), "a", 1.0), (5, t(13, 0), "z", 0.0)],
+    ]
+    src = str(tmp_path / "dedup_win_src")
+    base = time.time() - 3600
+    for i, rows in enumerate(drops):
+        before = set(os.listdir(src)) if os.path.isdir(src) else set()
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        # the file source replays oldest-first: pin the drop order
+        for name in set(os.listdir(src)) - before:
+            os.utime(os.path.join(src, name), (base + i, base + i))
+    batch = spark.createDataFrame([r for d in drops for r in d], schema)
+
+    sdf = read_stream(
+        spark, src, batch.schema, fmt="parquet", max_files_per_trigger=1
+    )
+    deduped = stream_dedup(sdf, ["eid"], "ts", watermark="1 hour")
+    aggs = [F.count(F.lit(1)).alias("n"), F.sum("value").alias("total")]
+    agg = windowed_agg(deduped, "ts", "30 minutes", ["k"], aggs,
+                       watermark="1 hour")
+    run_to_memory(agg, "dedup_win")  # append: closed windows only
+    got = {
+        (r["k"], r["bucket"]): (r["n"], r["total"])
+        for r in spark.table("dedup_win").collect()
+    }
+    want_df = resample(exact_dedup(batch, "eid", "eid"), "ts", "30 minutes",
+                       ["k"], aggs)
+    # final watermark 12:00: closed windows end at or before it
+    want = {
+        (r["k"], r["bucket"]): (r["n"], r["total"])
+        for r in want_df.collect()
+        if r["bucket"] <= t(11, 30)
+    }
+    assert got == want
+    # the replayed event 1 counts once in the 10:00 "a" window
+    assert got[("a", t(10, 0))] == (1, 1.0)
+
+    with pytest.raises(ValueError, match="3600000 ms.*'2 hours'"):
+        windowed_agg(deduped, "ts", "30 minutes", ["k"], aggs,
+                     watermark="2 hours")
+
+
 def test_stream_static_join_matches_batch(spark, stream_src):
     """Stream-static enrichment: a streaming fact joined to a batch
     dimension (the streaming twin of the flagship's fact⋈dim join) must
@@ -528,8 +589,6 @@ def test_progress_ring_listener(spark, stream_src):
         )
         q.awaitTermination(120)
         # listener events are delivered async — poll briefly
-        import time
-
         for _ in range(40):
             snap = ring.snapshot(spark)
             if snap.count() > 0:
