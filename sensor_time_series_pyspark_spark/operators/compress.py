@@ -7,60 +7,31 @@ compression on slow-moving gas readings like the reference's O2 channel
 decision depends on the previous KEPT row, not the previous row, so it
 is inherently sequential per series — no window-function rewrite exists.
 
-Spark shape: each series is assembled in the JVM
-(``collect_list(struct(ts, value))`` + ``array_sort``) and the O(n)
-fold runs in a SCALAR Arrow ``pandas_udf`` over the per-series arrays,
-thousands of series per Arrow batch, returning the kept INDICES; the
-JVM re-expands kept rows with ``element_at`` + ``explode``. The
-original per-key ``applyInPandas`` paid the per-group plan/serialize
-overhead once per series — with bounded series that overhead dominated
-the fold (the q603 rainflow lesson, guide §4: measured 5-8x on
-q130/q142/q143 at sf0.1). Each series still compresses independently
-(embarrassingly parallel across series); at 100 TB the constraint is
-unchanged — one series must fit in a worker (same contract as the
-forecast harness, ml/forecast.py); bound it by resampling first if a
-series is unboundedly long.
+Both compressors run through the batch fold harness
+(``operators/fold.py:fold_by_key``), returning the kept row indices of
+each series; series compress independently, and one series must fit in
+a worker.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from functools import partial
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fold import fold_by_key
 
-def _fold_kept_rows(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    keep_udf,
-) -> DataFrame:
-    """Shared skeleton for sequential keep/drop folds: sort each key's
-    (ts, value) pairs in the JVM, run ``keep_udf`` (micros array,
-    value array -> kept index array) once per series inside an Arrow
-    batch, re-expand kept rows natively. The (ts, value) struct sort
-    reproduces the old pandas ``sort_values([ts, value])`` order."""
-    pairs = F.array_sort(
-        F.collect_list(F.struct(F.col(ts_col), F.col(value_col)))
-    )
-    per_key = df.groupBy(key_col).agg(pairs.alias("__p"))
-    us: Column = F.transform("__p", lambda s: F.unix_micros(s[ts_col]))
-    vs: Column = F.transform("__p", lambda s: s[value_col])
-    kept = per_key.select(
-        F.col(key_col), F.col("__p"), keep_udf(us, vs).alias("__k")
-    )
-    return kept.select(
-        F.col(key_col),
-        F.explode(
-            F.transform("__k", lambda i: F.element_at("__p", i + 1))
-        ).alias("__r"),
-    ).select(
-        F.col(key_col),
-        F.col(f"__r.{ts_col}").alias(ts_col),
-        F.col(f"__r.{value_col}").alias(value_col),
-    )
+
+def _deadband_keep(_us, v, *, epsilon: float) -> list[tuple]:
+    out = []
+    last = None
+    for i, x in enumerate(v):
+        if last is None or abs(x - last) > epsilon:
+            out.append((i,))
+            last = x
+    return out
 
 
 def deadband_compress(
@@ -73,27 +44,54 @@ def deadband_compress(
     """Keep the first row per key, then every row whose value deviates
     from the last KEPT value by MORE than ``epsilon`` (strict —
     ``|v - last_kept| > ε``). Rows are ordered by (ts, value) within
-    the key so duplicate timestamps compress deterministically.
+    the key so duplicate timestamps compress deterministically; rows
+    with a NULL timestamp fold last.
 
     Output: key, ts, value — the kept rows only.
     """
+    return fold_by_key(
+        df, key_col, ts_col, [value_col],
+        partial(_deadband_keep, epsilon=epsilon),
+    )
 
-    @F.pandas_udf("array<int>")
-    def keep_idx(us: pd.Series, vs: pd.Series) -> pd.Series:
-        def one(_us, v) -> list[int]:
-            out: list[int] = []
-            last = None
-            for i, x in enumerate(v):
-                if last is None or abs(x - last) > epsilon:
-                    out.append(i)
-                    last = x
-            return out
 
-        return pd.Series(
-            [one(u, v) for u, v in zip(us, vs)], dtype=object
-        )
-
-    return _fold_kept_rows(df, key_col, ts_col, value_col, keep_idx)
+def _sdt_keep(us, v, *, epsilon: float) -> list[tuple]:
+    n = len(v)
+    # micros*1000 is the exact nanos value: the slopes divide the same
+    # operands as a datetime64[ns].astype(int64) / 1e9 conversion
+    t = np.asarray(us, dtype=np.int64) * 1000 / 1e9  # seconds
+    keep = [False] * n
+    keep[0] = True
+    a = 0          # index of last archived point
+    prev = 0       # previous point seen (candidate to archive)
+    lo, hi = float("-inf"), float("inf")
+    for i in range(1, n):
+        dt = t[i] - t[a]
+        if dt <= 0:
+            # duplicate timestamp: immediate corridor test on
+            # value distance only
+            if abs(v[i] - v[a]) > epsilon:
+                keep[prev] = True
+                a = prev
+                lo, hi = float("-inf"), float("inf")
+            prev = i
+            continue
+        s_hi = (v[i] + epsilon - v[a]) / dt
+        s_lo = (v[i] - epsilon - v[a]) / dt
+        hi = min(hi, s_hi)
+        lo = max(lo, s_lo)
+        if lo > hi:
+            # corridor collapsed: archive previous, restart
+            keep[prev] = True
+            a = prev
+            lo, hi = float("-inf"), float("inf")
+            dt = t[i] - t[a]
+            if dt > 0:
+                hi = (v[i] + epsilon - v[a]) / dt
+                lo = (v[i] - epsilon - v[a]) / dt
+        prev = i
+    keep[n - 1] = True
+    return [(i,) for i, k in enumerate(keep) if k]
 
 
 def swinging_door_compress(
@@ -114,61 +112,16 @@ def swinging_door_compress(
     segment extends; when the corridor inverts, the PREVIOUS point is
     kept and the corridor restarts from it. First and last points of a
     series are always kept, so reconstruction covers the full range.
+    Rows with a NULL timestamp have no place on the time axis and are
+    dropped.
 
-    Sequential per series (corridor state) → one Arrow-batched fold
-    per series (``_fold_kept_rows``), O(n) per series — same scale
-    contract as ``deadband_compress``. The slope arithmetic divides
-    NANOSECOND-derived seconds exactly as the old pandas path did
-    (micros*1000 / 1e9), so corridor decisions are bit-identical.
+    Sequential per series (corridor state), O(n) per series — same
+    scale contract as ``deadband_compress``.
     """
-
-    @F.pandas_udf("array<int>")
-    def keep_idx(us: pd.Series, vs: pd.Series) -> pd.Series:
-        def one(u, v) -> list[int]:
-            n = len(v)
-            if n == 0:
-                return []
-            # identical operands to the old datetime64[ns].astype(int64)
-            # / 1e9 conversion: micros*1000 is the exact nanos value
-            t = u.astype("int64") * 1000 / 1e9  # seconds
-            keep = [False] * n
-            keep[0] = True
-            a = 0          # index of last archived point
-            prev = 0       # previous point seen (candidate to archive)
-            lo, hi = float("-inf"), float("inf")
-            for i in range(1, n):
-                dt = t[i] - t[a]
-                if dt <= 0:
-                    # duplicate timestamp: immediate corridor test on
-                    # value distance only
-                    if abs(v[i] - v[a]) > epsilon:
-                        keep[prev] = True
-                        a = prev
-                        lo, hi = float("-inf"), float("inf")
-                    prev = i
-                    continue
-                s_hi = (v[i] + epsilon - v[a]) / dt
-                s_lo = (v[i] - epsilon - v[a]) / dt
-                hi = min(hi, s_hi)
-                lo = max(lo, s_lo)
-                if lo > hi:
-                    # corridor collapsed: archive previous, restart
-                    keep[prev] = True
-                    a = prev
-                    lo, hi = float("-inf"), float("inf")
-                    dt = t[i] - t[a]
-                    if dt > 0:
-                        hi = (v[i] + epsilon - v[a]) / dt
-                        lo = (v[i] - epsilon - v[a]) / dt
-                prev = i
-            keep[n - 1] = True
-            return [i for i, k in enumerate(keep) if k]
-
-        return pd.Series(
-            [one(u, v) for u, v in zip(us, vs)], dtype=object
-        )
-
-    return _fold_kept_rows(df, key_col, ts_col, value_col, keep_idx)
+    return fold_by_key(
+        df.where(F.col(ts_col).isNotNull()), key_col, ts_col, [value_col],
+        partial(_sdt_keep, epsilon=epsilon),
+    )
 
 
 def delta_encode(

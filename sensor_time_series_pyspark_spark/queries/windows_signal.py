@@ -183,8 +183,8 @@ def _q_deadband(spark: SparkSession, sf: str) -> DataFrame:
     """Deadband (exception) compression per series (operators/
     compress.py): keep first + every >ε excursion from the last KEPT
     value — the PI-historian storage rule. Inherently sequential per
-    series → applyInPandas per user; oracle is a recursive CTE
-    replaying the same fold."""
+    series → the batch fold harness (operators/fold.py); oracle is a
+    recursive CTE replaying the same fold."""
     from sensor_time_series_pyspark_spark.operators import deadband_compress
 
     ev = read_table(spark, sf, "events").where(F.col("value").isNotNull())

@@ -47,11 +47,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-sane defaults.
+    """Build a SparkSession with scale-sane defaults, or return the
+    already-active session unchanged (its runtime confs, such as the
+    shuffle partition count, stay as its owner set them).
 
     Every config here is equally valid on a 1000-executor cluster; only
     ``master`` and the partition count are machine-dependent.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = shuffle_partitions or default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)

@@ -4,31 +4,31 @@ every event live and agree exactly with their offline batch twins
 online forecasting (applyInPandasWithState if wanted)").
 
 Each recurrence (EWMA, Page-Hinkley, debounce, space-saving) is one
-pure step ``step(state, ts, *values) -> (state, out_row | None)``:
+pure step ``step(state, us, *values) -> (state, out_row | None)``:
 ``state`` is the O(1) per-series tuple that survives between events,
-and ``out_row`` holds the output columns after (key, ts), or None when
-the event emits nothing. Two private harnesses run a step over the rows
-of one key in ``ts`` order:
+``us`` is the event time in epoch micros (None when NULL), and
+``out_row`` holds the output columns after (key, ts), or None when the
+event emits nothing. ``_fold`` runs a step over one key's rows, which
+two harnesses hand it in the same order (operators/fold.py):
 
 - ``_fold_stream`` — the only ``applyInPandasWithState`` call: loads
   the key's GroupState (or the step's initial state), folds every
   micro-batch, saves the state, and drops it after
   ``timeout_minutes`` of processing-time idleness.
-- ``_fold_batch`` — the only ``applyInPandas`` call, for the batch
-  twins. Batch needs its own harness because Spark rejects
-  ``applyInPandasWithState`` in a batch query.
+- ``operators/fold.py:fold_by_key`` — the batch harness, shared with
+  the historian compression folds (Spark rejects
+  ``applyInPandasWithState`` in a batch query).
 
 Every event is scored against the state BEFORE it is folded in, and
 both harnesses run the same step, so the output is identical whether
 rows arrive in one batch or many (tested in test_streaming.py).
-``debounce_batch`` keeps its Arrow fold over integer micros but takes
-its cooldown rule from the same debounce step.
 """
 
 from __future__ import annotations
 
 import math
 from collections.abc import Callable, Iterator, Sequence
+from datetime import datetime
 from functools import partial
 from typing import Any
 
@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.fold import epoch_micros, fold_by_key, sort_rows
+
 Step = Callable[..., tuple[tuple, "tuple | None"]]
 
 
@@ -56,22 +58,37 @@ def _out_schema(key_field: StructField, *fields: tuple[str, Any]) -> StructType:
 
 
 def _fold(
-    step: Step,
-    state: tuple,
-    key: Any,
-    pdf: pd.DataFrame,
-    ts_col: str,
-    value_cols: Sequence[str],
+    step: Step, state: tuple, us: Sequence, *values: Sequence
 ) -> tuple[tuple, list[tuple]]:
-    """Run ``step`` over one key's rows in ``ts`` order; the rows to
-    emit are (key, ts, *out_row)."""
-    pdf = pdf.sort_values(ts_col)
+    """Run ``step`` over one key's rows, already in fold order; the
+    rows to emit are (index, *out_row)."""
     rows = []
-    for ts, *values in zip(pdf[ts_col], *(pdf[c] for c in value_cols)):
-        state, out = step(state, ts, *values)
+    for i, row in enumerate(zip(us, *values)):
+        state, out = step(state, *row)
         if out is not None:
-            rows.append((key, ts, *out))
+            rows.append((i, *out))
     return state, rows
+
+
+def _fold_series(step: Step, init: tuple, us: Sequence, *values: Sequence):
+    """The batch harness's per-series function: ``step`` over a whole
+    series from its initial state."""
+    return _fold(step, init, us, *values)[1]
+
+
+def _batch_twin(
+    df: DataFrame, key_col: str, ts_col: str, value_col: str,
+    step: Step, init: tuple, fields: Sequence[tuple[str, Any]],
+) -> DataFrame:
+    """``step`` folded over each whole series by the batch harness,
+    shaped like the stream operator's output (``_out_schema``)."""
+    out = fold_by_key(
+        df, key_col, ts_col, [value_col], partial(_fold_series, step, init),
+        fields,
+    )
+    return out.withColumn(
+        ts_col, F.col(ts_col).cast(TimestampType())
+    ).withColumnRenamed(ts_col, "ts")
 
 
 def _fold_stream(
@@ -97,9 +114,17 @@ def _fold_stream(
             return
         st = tuple(state.get) if state.exists else init
         for pdf in pdfs:
-            st, rows = _fold(step, st, key[0], pdf, ts_col, value_cols)
+            pdf = sort_rows(pdf, ts_col, value_cols)
+            st, rows = _fold(
+                step, st, epoch_micros(pdf[ts_col]),
+                *(pdf[c].tolist() for c in value_cols),
+            )
             if rows:
-                yield pd.DataFrame(rows, columns=out_schema.names)
+                ts = pdf[ts_col].tolist()
+                yield pd.DataFrame(
+                    [(key[0], ts[i], *out) for i, *out in rows],
+                    columns=out_schema.names,
+                )
         state.update(st)
         if timeout_minutes:
             state.setTimeoutDuration(timeout_minutes * 60 * 1000)
@@ -118,22 +143,6 @@ def _fold_stream(
     )
 
 
-def _fold_batch(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_cols: Sequence[str],
-    step: Step,
-    init: tuple,
-    out_schema: StructType,
-) -> DataFrame:
-    def fold(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-        _, rows = _fold(step, init, key[0], pdf, ts_col, value_cols)
-        return pd.DataFrame(rows, columns=out_schema.names)
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
-
-
 # ---------------------------------------------------------------------------
 # EWMA + z-score
 # ---------------------------------------------------------------------------
@@ -148,7 +157,7 @@ _EWMA_FIELDS = (
 )
 
 
-def _ewma_step(state: tuple, ts: Any, v: Any, *, alpha: float):
+def _ewma_step(state: tuple, us: Any, v: Any, *, alpha: float):
     """One EWMA update (Welford-style EWM, West 1979): the z-score uses
     the state BEFORE the event. The IEEE operation order is fixed — the
     q50 recursive-CTE oracle replicates it bit for bit."""
@@ -197,11 +206,10 @@ def ewma_anomaly_batch(
     alpha: float = 0.2,
 ) -> DataFrame:
     """Batch twin of ``ewma_anomaly_stream`` (same ``_ewma_step`` fold
-    via ``applyInPandas``) — used to assert stream == batch."""
-    return _fold_batch(
-        df, key_col, ts_col, [value_col],
-        partial(_ewma_step, alpha=alpha), _EWMA_INIT,
-        _out_schema(df.schema[key_col], *_EWMA_FIELDS),
+    through the batch harness) — used to assert stream == batch."""
+    return _batch_twin(
+        df, key_col, ts_col, value_col, partial(_ewma_step, alpha=alpha),
+        _EWMA_INIT, _EWMA_FIELDS,
     )
 
 
@@ -219,7 +227,7 @@ _PH_FIELDS = (
 )
 
 
-def _ph_step(state: tuple, ts: Any, x: Any, *, delta: float, threshold: float):
+def _ph_step(state: tuple, us: Any, x: Any, *, delta: float, threshold: float):
     """One online Page-Hinkley update (the river/MOA recurrence):
     incremental mean, cumulative deviation m += x - mean_t - delta
     (with the UPDATED mean, matching the canonical streaming form),
@@ -267,11 +275,11 @@ def page_hinkley_batch(
     threshold: float = 50.0,
 ) -> DataFrame:
     """Batch twin of ``page_hinkley_stream`` (same ``_ph_step`` fold
-    via ``applyInPandas``) — used to assert stream == batch."""
-    return _fold_batch(
-        df, key_col, ts_col, [value_col],
-        partial(_ph_step, delta=delta, threshold=threshold), _PH_INIT,
-        _out_schema(df.schema[key_col], *_PH_FIELDS),
+    through the batch harness) — used to assert stream == batch."""
+    return _batch_twin(
+        df, key_col, ts_col, value_col,
+        partial(_ph_step, delta=delta, threshold=threshold),
+        _PH_INIT, _PH_FIELDS,
     )
 
 
@@ -313,12 +321,7 @@ def debounce_stream(
     (tested). Rows with a NULL timestamp are dropped, as in
     ``debounce_batch``. Output: the surviving (key, ts) rows.
     """
-    gap_us = cooldown_seconds * 1_000_000
-
-    def step(state: tuple, ts: Any):
-        us = None if pd.isna(ts) else pd.Timestamp(ts).value // 1000
-        return _debounce_step(state, us, gap_us=gap_us)
-
+    step = partial(_debounce_step, gap_us=cooldown_seconds * 1_000_000)
     return _fold_stream(
         sdf, key_col, ts_col, [], step, _DEBOUNCE_INIT, "last_us long",
         StructType([sdf.schema[key_col], sdf.schema[ts_col]]),
@@ -336,49 +339,17 @@ def debounce_batch(
     cooldown rule) — asserts stream == batch, and serves as the offline
     rate-limit pass over historical archives.
 
-    Python-boundary shape (guide §4): the per-key timestamp array is
-    assembled in the JVM (collect_list + array_sort), the fold runs in
-    a scalar Arrow ``pandas_udf`` on integer micros — thousands of
-    keys per Arrow batch instead of one pandas DataFrame per key
-    (whose per-group overhead dominated the O(n) scan; the q603
-    rainflow lesson) — and kept timestamps re-expand natively.
-
     NULL-timestamp contract (deliberate): rows with a NULL timestamp
     are dropped up front, so a key whose timestamps are ALL NULL is
-    absent from the output. (collect_list already skipped NULLs; the
-    explicit filter makes the behavior a documented contract rather
-    than an aggregate side effect.)"""
+    absent from the output."""
     step = partial(_debounce_step, gap_us=cooldown_seconds * 1_000_000)
-
-    @F.pandas_udf("array<int>")
-    def keep_idx(us: pd.Series) -> pd.Series:
-        def one(u) -> list[int]:
-            state, out = _DEBOUNCE_INIT, []
-            for i, x in enumerate(u):
-                state, row = step(state, x)
-                if row is not None:
-                    out.append(i)
-            return out
-
-        return pd.Series([one(u) for u in us], dtype=object)
-
-    per_key = (
-        df.where(F.col(ts_col).isNotNull())
-        .groupBy(key_col)
-        .agg(F.array_sort(F.collect_list(F.col(ts_col))).alias("__t"))
+    # the coalesce never fires after the filter; it tells the planner
+    # so, and keeps the output ts non-nullable
+    timed = df.where(F.col(ts_col).isNotNull()).withColumn(
+        ts_col, F.coalesce(ts_col, F.lit(datetime(1970, 1, 1)))
     )
-    kept = per_key.select(
-        F.col(key_col),
-        F.col("__t"),
-        keep_idx(
-            F.transform("__t", lambda t: F.unix_micros(t))
-        ).alias("__k"),
-    )
-    return kept.select(
-        F.col(key_col),
-        F.explode(
-            F.transform("__k", lambda i: F.element_at("__t", i + 1))
-        ).alias(ts_col),
+    return fold_by_key(
+        timed, key_col, ts_col, [], partial(_fold_series, step, _DEBOUNCE_INIT)
     )
 
 
@@ -395,7 +366,7 @@ _SS_FIELDS = (
 )
 
 
-def _ss_step(state: tuple, ts: Any, item: Any, *, capacity: int):
+def _ss_step(state: tuple, us: Any, item: Any, *, capacity: int):
     """One space-saving update (Metwally 2005): increment a tracked
     item, admit into spare capacity, or evict the minimum counter and
     inherit its count + 1 (the overestimate bound). Deterministic
@@ -449,9 +420,8 @@ def heavy_hitters_batch(
     capacity: int = 8,
 ) -> DataFrame:
     """Batch twin of ``heavy_hitters_stream`` (same ``_ss_step`` fold
-    via ``applyInPandas``) — used to assert stream == batch."""
-    return _fold_batch(
-        df, key_col, ts_col, [item_col],
-        partial(_ss_step, capacity=capacity), _SS_INIT,
-        _out_schema(df.schema[key_col], *_SS_FIELDS),
+    through the batch harness) — used to assert stream == batch."""
+    return _batch_twin(
+        df, key_col, ts_col, item_col, partial(_ss_step, capacity=capacity),
+        _SS_INIT, _SS_FIELDS,
     )

@@ -19,19 +19,6 @@ def spark():
     yield s
 
 
-@pytest.fixture(autouse=True)
-def _restore_shuffle_partitions(request):
-    """Tests that run an example's main() call get_spark() again, and its
-    getOrCreate resets the shared session's shuffle partition count to the
-    host's CPU count. Put the session's count back after every test that
-    used the session, so no test depends on which tests ran before it."""
-    yield
-    if "spark" in request.fixturenames:
-        request.getfixturevalue("spark").conf.set(
-            "spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS)
-        )
-
-
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL

@@ -88,3 +88,14 @@ def test_drift_monitor_example(spark):
     import drift_monitor
 
     assert drift_monitor.main(SF) == 0
+
+
+def test_get_spark_leaves_the_running_session_alone(spark):
+    """get_spark() returns the session already running with its runtime
+    confs untouched: the tests' 8 shuffle partitions stay, whatever the
+    host's CPU count or the partition count the caller asks for."""
+    from sensor_time_series_pyspark_spark.session import get_spark
+
+    assert get_spark() is spark
+    assert get_spark("example-etl", shuffle_partitions=3) is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

@@ -68,9 +68,10 @@ def test_relational_queries_stay_jvm_side(built):
     semantics, not an accident:
       - q124_dtw_pairs: banded-DP DTW (operators/dtw.py), round-3
         oracle pins the IEEE cell order.
-      - q93_deadband / q130_debounce / q143_swinging_door: sequential
-        per-key compression folds (operators/compress.py,
-        streaming/stateful.py) — inherently order-dependent state
+      - q50_ewma_anomaly / q93_deadband / q130_debounce /
+        q143_swinging_door: sequential per-key folds (EWMA z-score,
+        deadband, debounce, swinging door) run by the batch fold
+        harness (operators/fold.py) — inherently order-dependent state
         machines; one Arrow batch carries thousands of keys, the fold
         is O(n) per key. Scale story: per-key series are bounded by
         the retention window; the Arrow fold shuffles only (key,
@@ -86,9 +87,10 @@ def test_relational_queries_stay_jvm_side(built):
     The compress/rainflow five were rewritten in round 10 from
     applyInPandas (FlatMapGroupsInPandas — which this gate previously
     did NOT match, a blind spot) to scalar Arrow folds
-    (ArrowEvalPython)."""
+    (ArrowEvalPython), and q50 followed onto the same harness."""
     allow = {
         "q124_dtw_pairs",
+        "q50_ewma_anomaly",
         "q93_deadband",
         "q130_debounce",
         "q143_swinging_door",
@@ -101,18 +103,17 @@ def test_relational_queries_stay_jvm_side(built):
     # separately so grouped Python can never hide from this gate again.
     # Entries are the DECLARED per-entity sequential forecast
     # recursions (ml/forecast.py): Holt / Holt-Winters / seasonal
-    # decomposition / EWMA control limits are order-dependent state
-    # recursions over one entity's bounded series; each has a
-    # recursive-CTE hash-gated oracle replaying the identical float
-    # recursion, so the Python is the semantics. Scale story: groups
-    # are entity-grain (bounded by retention), the exchange carries
-    # (entity, ts, value) only, and real per-group numeric work
-    # amortizes the per-group overhead — measured ≤ seconds in the
-    # full-registry screen (OPTIMIZATION_r10.md).
+    # decomposition are order-dependent recursions over one entity's
+    # bounded series; each has a recursive-CTE hash-gated oracle
+    # replaying the identical float recursion, so the Python is the
+    # semantics. Scale story: groups are entity-grain (bounded by
+    # retention), the exchange carries (entity, ts, value) only, and
+    # real per-group numeric work amortizes the per-group overhead —
+    # measured ≤ seconds in the full-registry screen
+    # (OPTIMIZATION_r10.md).
     allow_grouped = {
         "q24_holt_forecast",
         "q26_seasonal_decompose",
-        "q50_ewma_anomaly",
         "q300_holt_winters",
     }
     markers = ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
@@ -125,11 +126,35 @@ def test_relational_queries_stay_jvm_side(built):
         plan = plan_of(built[name])
         if name not in allow and any(m in plan for m in markers):
             offenders.append(name)
-        if name not in allow_grouped and name not in allow and (
-            "FlatMapGroupsInPandas" in plan
-        ):
+        if name not in allow_grouped and "FlatMapGroupsInPandas" in plan:
             offenders.append(f"{name} (grouped)")
     assert not offenders, f"Python in relational plans: {offenders}"
+
+
+@pytest.mark.parametrize(
+    "op, args",
+    [
+        ("ewma_anomaly_batch", ("value",)),
+        ("page_hinkley_batch", ("value",)),
+        ("heavy_hitters_batch", ("event_type",)),
+        ("debounce_batch", (60,)),
+        ("deadband_compress", ("value", 1.0)),
+        ("swinging_door_compress", ("value", 1.0)),
+    ],
+)
+def test_batch_folds_run_one_arrow_udf(spark, op, args):
+    """Every sequential per-key batch fold runs through the one batch
+    harness: a single scalar Arrow UDF over per-key arrays, never a
+    grouped pandas frame per key. Page-Hinkley and heavy hitters have no
+    registry query, so the registry gate above cannot see them."""
+    from sensor_time_series_pyspark_spark.operators import compress
+    from sensor_time_series_pyspark_spark.streaming import stateful
+
+    fn = getattr(stateful, op, None) or getattr(compress, op)
+    ev = read_table(spark, SF, "events")
+    plan = plan_of(fn(ev, "user_id", "ts", *args))
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_no_accidental_cartesian_products(built):

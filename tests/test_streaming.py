@@ -468,6 +468,63 @@ def test_debounce_stream_drops_null_timestamps_like_batch(spark, tmp_path):
     assert got == want and len(want) == 2
 
 
+def test_folds_order_tied_and_null_timestamps(spark, tmp_path):
+    """One fold order for both harnesses: a key's rows fold by ts, ties
+    broken by value, NULL ts last. Stream == batch for EWMA and debounce
+    on tied and NULL timestamps, and the historian folds keep the rule:
+    deadband folds a NULL-ts row last (here inside the band, so dropped),
+    swinging door drops NULL-ts rows (no place on the time axis)."""
+    from datetime import datetime
+
+    from sensor_time_series_pyspark_spark.operators import (
+        deadband_compress,
+        swinging_door_compress,
+    )
+    from sensor_time_series_pyspark_spark.streaming.stateful import (
+        debounce_batch,
+        debounce_stream,
+    )
+
+    t0, t30, t1 = (
+        datetime(2024, 1, 1, 0, 0), datetime(2024, 1, 1, 0, 0, 30),
+        datetime(2024, 1, 1, 2, 0),
+    )
+    # arrival order puts the tied larger value first
+    rows = [("a", t0, 3.0), ("a", t0, 1.0), ("a", None, 9.0),
+            ("a", t30, 2.0), ("a", t1, 9.5), ("b", None, 4.0)]
+    df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
+    d = str(tmp_path / "src")
+    df.coalesce(1).write.parquet(d)
+
+    def stream(op, name):
+        run_to_memory(op(read_stream(spark, d, df.schema, fmt="parquet")), name)
+        return sorted(map(tuple, spark.table(name).collect()), key=repr)
+
+    def batch(out):
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    ewma = batch(ewma_anomaly_batch(df, "k", "ts", "v"))
+    assert stream(
+        lambda s: ewma_anomaly_stream(s, "k", "ts", "v"), "fold_order_ewma"
+    ) == ewma
+    # the tie folds the smaller value first; the NULL-ts row folds last
+    n_seen = {(r[1], r[2]): r[5] for r in ewma}
+    assert (n_seen[(t0, 1.0)], n_seen[(t0, 3.0)], n_seen[(None, 9.0)]) == (1, 2, 5)
+
+    debounced = batch(debounce_batch(df, "k", "ts", cooldown_seconds=60))
+    assert stream(
+        lambda s: debounce_stream(s, "k", "ts", cooldown_seconds=60),
+        "fold_order_debounce",
+    ) == debounced == [("a", t0), ("a", t1)]
+
+    assert batch(deadband_compress(df, "k", "ts", "v", epsilon=2.0)) == [
+        ("a", t0, 1.0), ("a", t1, 9.5), ("b", None, 4.0),
+    ]
+    assert batch(swinging_door_compress(df, "k", "ts", "v", epsilon=2.0)) == [
+        ("a", t0, 1.0), ("a", t1, 9.5),
+    ]
+
+
 class _CaptureGroupBy:
     """Stands in for a streaming DataFrame: records the per-group
     function and options an operator hands to applyInPandasWithState."""
