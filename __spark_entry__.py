@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sensor_time_series_pyspark_spark.plans import sensor_etl
 from sensor_time_series_pyspark_spark.queries import ORACLE_SQL, QUERIES
-from sensor_time_series_pyspark_spark.queries.common import SF0001
+
+SF0001 = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -45,12 +45,14 @@ def deadband_compress(
     from the last KEPT value by MORE than ``epsilon`` (strict —
     ``|v - last_kept| > ε``). Rows are ordered by (ts, value) within
     the key so duplicate timestamps compress deterministically; rows
-    with a NULL timestamp fold last.
+    with a NULL timestamp fold last. Rows with a NULL value are dropped
+    before the fold: a NULL kept value would fail every later
+    comparison and swallow the rest of the series.
 
     Output: key, ts, value — the kept rows only.
     """
     return fold_by_key(
-        df, key_col, ts_col, [value_col],
+        df.where(F.col(value_col).isNotNull()), key_col, ts_col, [value_col],
         partial(_deadband_keep, epsilon=epsilon),
     )
 
@@ -113,13 +115,15 @@ def swinging_door_compress(
     kept and the corridor restarts from it. First and last points of a
     series are always kept, so reconstruction covers the full range.
     Rows with a NULL timestamp have no place on the time axis and are
-    dropped.
+    dropped, as are rows with a NULL value (their slopes would be NaN
+    and the corridor would never close).
 
     Sequential per series (corridor state), O(n) per series — same
     scale contract as ``deadband_compress``.
     """
     return fold_by_key(
-        df.where(F.col(ts_col).isNotNull()), key_col, ts_col, [value_col],
+        df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()),
+        key_col, ts_col, [value_col],
         partial(_sdt_keep, epsilon=epsilon),
     )
 

@@ -200,7 +200,7 @@ def ivf_topk_cosine(
     Output: qid, cid, rank, cosine (same contract as topk_cosine).
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     c_vecs = corpus.select(
         F.col(corpus_id).alias("cid"),

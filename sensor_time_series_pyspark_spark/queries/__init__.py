@@ -1,5 +1,4 @@
-"""Query families (split from the former monolithic
-__spark_entry__.py). Importing this package imports every family
+"""Query families. Importing this package imports every family
 module, whose register_many() calls populate QUERIES/ORACLE_SQL —
 and raise on any duplicate name."""
 

@@ -1,14 +1,19 @@
-"""Round-5 continuation module #4 (q504+): agreement/reliability
-statistics. Started because robust_business.py (né latest3.py) hit the ~2.4k-line module
-cap. Conventions: queries/common.py; exact integer cents moments;
-fixed-order double chains mirrored textually in the oracles."""
+"""Agreement/reliability statistics (q504+). Conventions: exact
+integer cents moments; fixed-order double chains mirrored textually
+in the oracles."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import tokens
+from sensor_time_series_pyspark_spark.queries.common import EVENT_TYPES
 from sensor_time_series_pyspark_spark.queries.complexity_evt import (
     _type_daily_cents,
 )
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 
 def _q_cronbach_alpha(spark: SparkSession, sf: str) -> DataFrame:

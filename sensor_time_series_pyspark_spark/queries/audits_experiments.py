@@ -17,9 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sensor_time_series_pyspark_spark.queries.common import read_table
 from sensor_time_series_pyspark_spark.queries.corpus_sampling import _h48
 from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 # 63 * 2^48: six significant bits, exactly representable as a double
 _KMV_NUM = float(63 * (1 << 48))

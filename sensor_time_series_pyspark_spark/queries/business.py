@@ -1,13 +1,33 @@
 """Business/ops analytics: funnels, SLAs, finance windows,
 feature tables (q200 .. q243).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import (
+    bpe_ish_token_count,
+    token_count,
+    tokens,
+)
+from sensor_time_series_pyspark_spark.operators import exact_dedup, sessionize
+from sensor_time_series_pyspark_spark.queries.common import (
+    DEC,
+    _REV_SQL,
+    _brand_graph,
+    _davg,
+    _davg_sql,
+    _dec,
+    _dsum,
+    _revenue,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
 
 def _q_auc(spark: SparkSession, sf: str) -> DataFrame:
     """ROC AUC of activity level predicting conversion (rank-sum

@@ -17,8 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sensor_time_series_pyspark_spark.queries.common import read_table
 from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 _CUTOFF = "2024-01-16"  # events span 2024-01-01 .. 2024-01-30
 

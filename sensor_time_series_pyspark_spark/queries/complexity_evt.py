@@ -1,17 +1,22 @@
-"""Round-5 continuation module (q462+): signal-complexity, effect
-sizes, and stump-training operators. Formerly latest2.py (started when
-inference.py hit the ~2.4k-line module cap).
+"""Signal-complexity, effect-size and stump-training operators
+(q462+).
 
-Conventions: see queries/common.py; every value-bearing aggregate is
-exact integer/decimal cents, ln epilogues run driver-side in Python
-(libm) over group-cardinality rows, and oracles replay the identical
-fold order (queries/registry.py raises on duplicate names)."""
+Conventions: every value-bearing aggregate is exact integer/decimal
+cents, ln epilogues run driver-side in Python (libm) over
+group-cardinality rows, and oracles replay the identical fold order
+(queries/registry.py raises on duplicate names)."""
 
 from __future__ import annotations
 
 import itertools
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import tokens
+from sensor_time_series_pyspark_spark.queries.common import EVENT_TYPES
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 
 def _type_daily_cents(spark: SparkSession, sf: str) -> DataFrame:

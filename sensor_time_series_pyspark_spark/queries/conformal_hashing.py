@@ -11,8 +11,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sensor_time_series_pyspark_spark.functions.text import tokens
-from sensor_time_series_pyspark_spark.queries.common import read_table
 from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 
 def _q_mondrian_conformal(spark: SparkSession, sf: str) -> DataFrame:

@@ -1,13 +1,238 @@
 """Core relational, temporal, dedup/similarity/text and ML
 surface queries (flagship .. q81).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import (
+    bpe_ish_token_count,
+    fingerprint64,
+    lang_id,
+    punct_ratio,
+    quality_score,
+    stopword_ratio,
+    token_count,
+    tokens,
+)
+from sensor_time_series_pyspark_spark.ml import (
+    classification_pipeline,
+    decode_predictions,
+    decompose,
+    fit_forecast,
+    grid_search_forecast,
+    regression_pipeline,
+    temporal_split,
+)
+from sensor_time_series_pyspark_spark.operators import (
+    asof_join,
+    dedup_clusters,
+    exact_dedup,
+    ffill,
+    interpolate_linear,
+    jaccard_pairs,
+    lead_target,
+    minhash_pairs,
+    missing_buckets,
+    pivot_wide,
+    quantile_clip,
+    resample,
+    sessionize,
+    spread,
+    topk_cosine,
+)
+from sensor_time_series_pyspark_spark.plans import sensor_etl
+from sensor_time_series_pyspark_spark.queries.common import (
+    DEC,
+    EVENT_TYPES,
+    _NBPE_SQL,
+    _PR_SQL,
+    _QUALITY_Q_SQL,
+    _SESSIONIZE_SQL,
+    _STOPWORD_LIST,
+    _SW_SQL,
+    _davg,
+    _davg_sql,
+    _dec,
+    _dsum,
+    _minhash_sql,
+    _nulled_events,
+    _rep_docs,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
+
+def _daily_series(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-user daily mean value — the bounded per-series frame every
+    forecasting query starts from (resample NATIVELY before any
+    applyInPandas so Python groups stay small; ml/forecast.py)."""
+    ev = read_table(spark, sf, "events")
+    return ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+        _davg(F.col("value")).alias("value")
+    )
+
+
+def _event_rules() -> dict[str, F.Column]:
+    return {
+        "value_in_range": (F.col("value") >= 0) & (F.col("value") <= 100),
+        "ts_not_null": F.col("ts").isNotNull(),
+        "known_event_type": F.col("event_type").isin(EVENT_TYPES),
+    }
+
+
+def _pivot_avg_sql(t: str) -> str:
+    return "coalesce(" + _davg_sql("value", "event_type='" + t + "'") + ", 0)"
+
+
+_FLAGSHIP_SQL = """
+WITH filtered AS (
+  SELECT * FROM events WHERE value IS NOT NULL AND value >= 0
+),
+joined AS (
+  SELECT make_timestamp(CAST(floor(epoch(ts)/3600) AS BIGINT)*3600*1000000) AS bucket,
+         c_nationkey, trim(event_type) AS event_type, value
+  FROM filtered JOIN customer ON user_id = c_custkey
+),
+agg AS (
+  SELECT bucket, c_nationkey,
+    {click} AS click,
+    {view} AS view,
+    {purchase} AS purchase,
+    {signup} AS signup,
+    {error} AS error,
+    max(value) AS severity,
+    count(*) AS n_events
+  FROM joined GROUP BY bucket, c_nationkey
+)
+SELECT agg.*, n_name FROM agg JOIN nation ON c_nationkey = n_nationkey
+""".format(**{t: _pivot_avg_sql(t) for t in EVENT_TYPES})
+
+
+_PIVOT_SQL = """
+SELECT user_id,
+  {click} AS click,
+  {view} AS view,
+  {purchase} AS purchase,
+  {signup} AS signup,
+  {error} AS error,
+  count(*) AS n_events
+FROM events GROUP BY user_id
+""".format(**{t: _pivot_avg_sql(t) for t in EVENT_TYPES})
+
+
+_DOC_STATS_SQL = f"""
+WITH toks AS (
+  SELECT doc_id,
+    list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '') AS tok,
+    length(regexp_replace(trim(text), '\\s+', '', 'g')) AS total_chars
+  FROM documents
+)
+SELECT doc_id,
+  CAST(len(tok) AS INT) AS n_tokens,
+  total_chars / len(tok) AS avg_token_len,
+  CASE WHEN len(tok) > 0
+       THEN len(list_filter(tok, t -> list_contains({_STOPWORD_LIST}, lower(t)))) / len(tok)
+       ELSE 0 END AS stop_ratio
+FROM toks
+"""
+
+
+def _srp_sql(dim: int = 64, n_bits: int = 16, scale_bits: int = 20) -> str:
+    """DuckDB twin of srp_signature_portable: same seeded ±1 planes as
+    literals; integer-scaled dots are exact doubles (< 2^33), so the
+    sign — and therefore every signature bit — matches Spark exactly."""
+    from sensor_time_series_pyspark_spark.operators import srp_planes_rademacher
+
+    planes = srp_planes_rademacher(dim, n_bits)
+    scale = float(1 << scale_bits)
+    bit_terms = " + ".join(
+        f"(CASE WHEN list_dot_product(s, {planes[b]}::DOUBLE[]) > 0 "
+        f"THEN {1 << b} ELSE 0 END)"
+        for b in range(n_bits)
+    )
+    return f"""
+WITH scaled AS (
+  SELECT vec_id,
+    list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * {scale})) AS s
+  FROM embeddings
+)
+SELECT vec_id, CAST({bit_terms} AS BIGINT) AS srp_sig FROM scaled
+"""
+
+
+def _simhash_sql(
+    max_hamming: int = 6, n_bits: int = 48, n_bands: int = 8
+) -> str:
+    """DuckDB twin of simhash_pairs_portable: same md5-derived 48-bit
+    shingle ids, same per-bit majority votes, same banding and
+    bit_count(xor) verify."""
+    width = n_bits // n_bands
+    votes = ",\n    ".join(
+        f"sum(CASE WHEN (sid >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
+        for b in range(n_bits)
+    )
+    sig_terms = " + ".join(
+        f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(n_bits)
+    )
+    band_rows = "\n  UNION ALL\n  ".join(
+        f"SELECT id, {i} AS band_id, (sig >> {i * width}) & {(1 << width) - 1} "
+        "AS band_val FROM sigs"
+        for i in range(n_bands)
+    )
+    return rf"""
+WITH reps AS (
+  SELECT doc_id, text FROM documents
+  WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)
+),
+toks AS (
+  SELECT id, tok FROM (
+    SELECT doc_id AS id,
+      list_distinct(
+        list_transform(
+          generate_series(1, greatest(len(t) - 1, 0)),
+          i -> array_to_string(t[i:i+1], ' ')
+        )
+      ) AS tok
+    FROM (
+      SELECT doc_id,
+        list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
+      FROM reps
+    )
+  ) WHERE len(tok) > 0
+),
+ids AS (
+  SELECT id, ('0x' || substr(md5(sh), 1, 12))::BIGINT AS sid
+  FROM (SELECT id, unnest(tok) AS sh FROM toks)
+),
+votes AS (
+  SELECT id,
+    {votes}
+  FROM ids GROUP BY id
+),
+sigs AS (
+  SELECT id, CAST({sig_terms} AS BIGINT) AS sig FROM votes
+),
+bands AS (
+  {band_rows}
+),
+cand AS (
+  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+  FROM bands a JOIN bands b
+    ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.id < b.id
+)
+SELECT c.id_a, c.id_b,
+  CAST(bit_count(xor(sa.sig, sb.sig)) AS INT) AS hamming
+FROM cand c
+JOIN sigs sa ON c.id_a = sa.id
+JOIN sigs sb ON c.id_b = sb.id
+WHERE bit_count(xor(sa.sig, sb.sig)) <= {max_hamming}
+"""
+
 
 def _q_flagship(spark: SparkSession, sf: str) -> DataFrame:
     """The reference's full ETL pipeline (sensor_data_etl.py:24-104)
@@ -1629,27 +1854,24 @@ register_many(
               FROM documents
             ),
             feat AS (
-              SELECT doc_id, text, tok,
+              SELECT doc_id,
                 list_aggregate([
                   {{'score': len(list_filter(tok, t -> list_contains(['the','and','of','is','to'], t))), 'lang': 'en'}},
                   {{'score': len(list_filter(tok, t -> list_contains(['el','la','los','es','una'], t))), 'lang': 'es'}},
                   {{'score': len(list_filter(tok, t -> list_contains(['der','die','und','ist','ein'], t))), 'lang': 'de'}},
                   {{'score': len(list_filter(tok, t -> list_contains(['le','les','est','une','dans'], t))), 'lang': 'fr'}}
                 ], 'max') AS best,
-                CASE WHEN len(text) > 0
-                     THEN (len(text) - len(regexp_replace(text, '[!-/:-@\[-`{{-~]', '', 'g'))) / len(text)
-                     ELSE 0 END AS pr,
-                CASE WHEN len(tok) > 0
-                     THEN len(list_filter(tok, t -> list_contains({_STOPWORD_LIST}, t))) / len(tok)
-                     ELSE 0 END AS sw
+                {_PR_SQL} AS pr,
+                {_SW_SQL} AS sw,
+                len(tok) AS n_tok,
+                {_NBPE_SQL} AS n_bpe
               FROM toks
             )
             SELECT doc_id,
               CASE WHEN best.score > 0 THEN best.lang ELSE 'unknown' END AS lang_pred,
-              CAST(coalesce(list_aggregate(
-                list_transform(tok, w -> CAST(ceil(len(w)/4.0) AS INT)), 'sum'), 0) AS BIGINT) AS n_bpe,
+              n_bpe,
               pr AS punct_ratio,
-              (least(len(tok)/20.0, 1.0) + (1.0 - least(pr*5, 1.0)) + least(sw*4, 1.0)) / 3 AS quality
+              {_QUALITY_Q_SQL} AS quality
             FROM feat
         """,
         'q32_fingerprint_cardinality': r"""

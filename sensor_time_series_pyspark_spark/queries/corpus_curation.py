@@ -26,7 +26,6 @@ from sensor_time_series_pyspark_spark.queries.common import (
     _NBPE_SQL,
     _PR_SQL,
     _QUALITY_Q_SQL,
-    _STOPWORD_LIST,
     _SW_SQL,
 )
 from sensor_time_series_pyspark_spark.queries.registry import register_many

@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sensor_time_series_pyspark_spark.functions.text import tokens
-from sensor_time_series_pyspark_spark.queries.common import read_table
 from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 # floor(rate * 2^48) thresholds, precomputed so both engines compare
 # the SAME integer (the hash is uniform on [0, 2^48))

@@ -1,12 +1,62 @@
 """Hypothesis tests and drift monitors (q323 .. q354).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import (
+    STOPWORDS,
+    token_count,
+    tokens,
+)
+from sensor_time_series_pyspark_spark.operators import asof_join
+from sensor_time_series_pyspark_spark.operators.sampling import (
+    _threshold_hex as _thr,
+)
+from sensor_time_series_pyspark_spark.queries.common import (
+    DEC,
+    _REV_SQL,
+    _STOPWORD_LIST,
+    _dsum,
+    _revenue,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
+
+# NDCG@10 rank discounts 1/log2(r+1), precomputed once and rounded to
+# 12 decimals, so NO transcendental function runs in either engine —
+# sums over these decimal literals are exact and order-independent
+# (the benford-expectations pattern applied to ranking metrics).
+_NDCG_DISC = [
+    "1.0", "0.630929753571", "0.5", "0.430676558073", "0.386852807235",
+    "0.356207187108", "0.333333333333", "0.315464876786",
+    "0.301029995664", "0.289064826318",
+]
+# exact cumulative sums of the rounded literals (ideal DCG for m hits)
+_NDCG_CUM = [
+    "1.0", "1.630929753571", "2.130929753571", "2.561606311644",
+    "2.948459118879", "3.304666305987", "3.637999639320",
+    "3.953464516106", "4.254494511770", "4.543559338088",
+]
+
+
+# Powers of the 0.9 annual discount factor scaled by 10^7 — exact
+# INTEGERS (0.9^7 = 0.4782969 terminates at 7 decimals), so the NPV
+# accumulates as price_cents × factor_int pure-integer products.
+# High-scale decimal→double casts are NOT correctly rounded in every
+# engine (DuckDB's DECIMAL(38,14)→DOUBLE is off by 1 ulp on some
+# values); scale-0 decimals convert exactly-rounded in both, so the
+# float enters ONCE, at the final fixed /1e9 epilogue.
+_NPV_DISC_SCALED = [
+    10000000, 9000000, 8100000, 7290000,
+    6561000, 5904900, 5314410, 4782969,
+]
+
 
 def _q_hellinger_drift(spark: SparkSession, sf: str) -> DataFrame:
     """Hellinger distance between the first- and second-half event-

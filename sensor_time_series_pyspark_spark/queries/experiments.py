@@ -1,13 +1,40 @@
 """Experimentation, causal and curve analyses
 (q355 .. q383).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+import math
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import tokens
+from sensor_time_series_pyspark_spark.operators.sampling import (
+    _threshold_hex as _thr,
+)
+from sensor_time_series_pyspark_spark.queries.common import (
+    DEC,
+    EVENT_TYPES,
+    _dec,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
+
+# SPRT literal log-likelihood weights: H0 p0=0.20 vs H1 p1=0.25 for
+# the purchase share, alpha=0.05 / beta=0.20 Wald boundaries. Computed
+# ONCE here in Python and embedded as the same double literals in both
+# engines — no libm call ever runs engine-side (the repo-wide rule
+# that keeps log-based stats hash-stable).
+_SPRT_P0, _SPRT_P1 = 0.20, 0.25
+_SPRT_L1 = math.log(_SPRT_P1 / _SPRT_P0)
+_SPRT_L0 = math.log((1.0 - _SPRT_P1) / (1.0 - _SPRT_P0))
+_SPRT_UP = math.log((1.0 - 0.20) / 0.05)    # accept H1
+_SPRT_LO = math.log(0.20 / (1.0 - 0.05))    # accept H0
+
 
 def _q_cuped(spark: SparkSession, sf: str) -> DataFrame:
     """CUPED variance reduction (Deng et al. 2013): the experiment

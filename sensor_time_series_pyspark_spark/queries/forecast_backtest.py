@@ -21,8 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sensor_time_series_pyspark_spark.queries.common import _davg, read_table
+from sensor_time_series_pyspark_spark.queries.common import _davg
 from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 
 def _q_ari11_walkforward(spark: SparkSession, sf: str) -> DataFrame:

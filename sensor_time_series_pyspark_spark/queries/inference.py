@@ -1,14 +1,24 @@
 """Statistical inference & forecasting diagnostics (q439+): ADF,
 Ljung-Box, Tukey HSD, conformal intervals, capture-recapture,
-walk-forward backtests. (Formerly latest.py.)
+walk-forward backtests.
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import tokens
+from sensor_time_series_pyspark_spark.queries.common import (
+    EVENT_TYPES,
+    _brand_graph,
+    _dsum,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
 
 def _q_pagerank_gated(spark: SparkSession, sf: str) -> DataFrame:
     """Hash-gated PageRank (3 power iterations, d=0.85) on the brand

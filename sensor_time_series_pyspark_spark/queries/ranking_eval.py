@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sensor_time_series_pyspark_spark.queries.common import read_table
 from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 # 1/log2(i+1) for ranks 1..10 — identical literal text in both engines
 _DISC = [

@@ -1,19 +1,22 @@
-"""Round-5 continuation module #3 (q481+): embedding-space
-diagnostics and later additions. Started because complexity_evt.py (né latest2.py) hit the
-~2.4k-line module cap.
+"""Embedding-space diagnostics and later additions (q481+).
 
-Conventions: queries/common.py helpers; embeddings are 2^20-quantized
-to EXACT integers before any cross-engine aggregate (q47's
-discipline); per-dimension epilogues fold doubles in ascending-dim
-order (Python left fold == DuckDB ordered list_reduce); registry
-raises on duplicate names."""
+Conventions: embeddings are 2^20-quantized to EXACT integers before
+any cross-engine aggregate (q47's discipline); per-dimension
+epilogues fold doubles in ascending-dim order (Python left fold ==
+DuckDB ordered list_reduce); registry raises on duplicate names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import tokens
 from sensor_time_series_pyspark_spark.queries.complexity_evt import (
     _type_daily_cents,
 )
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
 
 _QSCALE = 1048576  # 2^20 — power-of-2 scale quantizes floats exactly
 _QSCALE2 = float(_QSCALE) * float(_QSCALE)  # 2^40, norm² unit

@@ -1,13 +1,41 @@
 """Sketches, sequences, cohorts, survival, graph and
 mergeable-moment queries (q144 .. q199).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import (
+    bpe_ish_token_count,
+    token_count,
+    tokens,
+)
+from sensor_time_series_pyspark_spark.operators import (
+    dedup_clusters,
+    jaccard_pairs,
+    minhash_pairs,
+    sessionize,
+)
+from sensor_time_series_pyspark_spark.queries.common import (
+    DEC,
+    _REV_SQL,
+    _STOPWORD_LIST,
+    _davg,
+    _davg_sql,
+    _dec,
+    _dsum,
+    _minhash_sql,
+    _nulled_events,
+    _rep_docs,
+    _revenue,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
 
 def _q_topk_sketch(spark: SparkSession, sf: str) -> DataFrame:
     """Mergeable frequent-items rollup (operators/sketches.py:

@@ -1,12 +1,26 @@
 """Statistics and sampling estimators (q244 .. q283).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import token_count, tokens
+from sensor_time_series_pyspark_spark.operators.sampling import (
+    _threshold_hex as _thr,
+)
+from sensor_time_series_pyspark_spark.queries.common import (
+    DEC,
+    _REV_SQL,
+    _dsum,
+    _revenue,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
 
 def _q_abc_classification(spark: SparkSession, sf: str) -> DataFrame:
     """ABC inventory classification: parts bucketed A/B/C at 80%/95%

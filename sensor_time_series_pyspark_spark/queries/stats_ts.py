@@ -1,13 +1,19 @@
 """Round-4 statistical/time-series batch: ICC, rank tests,
 survival, spectra (q384 .. q407).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.functions.text import tokens
+from sensor_time_series_pyspark_spark.queries.common import EVENT_TYPES
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
 
 def _q_icc(spark: SparkSession, sf: str) -> DataFrame:
     """Intraclass correlation ICC(1) of daily counts within event

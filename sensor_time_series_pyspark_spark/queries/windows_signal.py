@@ -1,13 +1,68 @@
 """Windowed signal analytics: ACF, CUSUM, rolling
 stats, drift and compression (q82 .. q143).
 
-Split out of the former monolithic __spark_entry__.py; function
-sources are verbatim. See queries/common.py for shared helpers and
-queries/registry.py for the duplicate-raising registration."""
+Shared helpers are in queries/common.py; queries/registry.py raises
+on duplicate query names."""
 
 from __future__ import annotations
 
-from sensor_time_series_pyspark_spark.queries.common import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from sensor_time_series_pyspark_spark.operators import asof_join, sessionize
+from sensor_time_series_pyspark_spark.operators.sampling import (
+    _threshold_hex as _thr,
+)
+from sensor_time_series_pyspark_spark.queries.common import (
+    DEC,
+    _STOPWORD_LIST,
+    _davg,
+    _davg_sql,
+    _dec,
+    _dsum,
+    _nulled_events,
+)
+from sensor_time_series_pyspark_spark.queries.registry import register_many
+from sensor_time_series_pyspark_spark.sources.readers import read_table
+
+
+def _partner_graph(spark: SparkSession, sf: str) -> DataFrame:
+    """Top-3 strongest-partner user graph (shared by q100/q139):
+    co-activity counts over (event_type, 30-min bucket) cells, each
+    user keeping its 3 highest-count partners (deterministic id
+    tiebreak). Degree <= 6 after symmetrization → graph algorithms on
+    it stay O(users) at any scale factor."""
+    ev = read_table(spark, sf, "events")
+    cell = ev.select(
+        "event_type",
+        F.expr("unix_micros(ts) div 1800000000").alias("bucket"),
+        "user_id",
+    ).distinct()
+    a, b = cell.alias("a"), cell.alias("b")
+    pair_counts = (
+        a.join(
+            b,
+            (F.col("a.event_type") == F.col("b.event_type"))
+            & (F.col("a.bucket") == F.col("b.bucket")),
+        )
+        .where(F.col("a.user_id") < F.col("b.user_id"))
+        .groupBy(
+            F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v")
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    sym = pair_counts.unionByName(
+        pair_counts.select(
+            F.col("v").alias("u"), F.col("u").alias("v"), "n"
+        )
+    )
+    w = Window.partitionBy("u").orderBy(F.col("n").desc(), F.col("v").asc())
+    return (
+        sym.withColumn("__rk", F.row_number().over(w))
+        .where(F.col("__rk") <= 3)
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+    )
+
 
 def _q_acf(spark: SparkSession, sf: str) -> DataFrame:
     """Per-series autocorrelation, lags 1-5 (operators/drift.py:acf) —

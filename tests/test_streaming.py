@@ -473,7 +473,9 @@ def test_folds_order_tied_and_null_timestamps(spark, tmp_path):
     broken by value, NULL ts last. Stream == batch for EWMA and debounce
     on tied and NULL timestamps, and the historian folds keep the rule:
     deadband folds a NULL-ts row last (here inside the band, so dropped),
-    swinging door drops NULL-ts rows (no place on the time axis)."""
+    swinging door drops NULL-ts rows (no place on the time axis). Both
+    drop NULL-value rows: a key that starts with one compresses as if
+    it were absent."""
     from datetime import datetime
 
     from sensor_time_series_pyspark_spark.operators import (
@@ -523,6 +525,21 @@ def test_folds_order_tied_and_null_timestamps(spark, tmp_path):
     assert batch(swinging_door_compress(df, "k", "ts", "v", epsilon=2.0)) == [
         ("a", t0, 1.0), ("a", t1, 9.5),
     ]
+
+    # a key whose first value is NULL
+    nulls = spark.createDataFrame(
+        [("c", datetime(2024, 1, 1, 0, i), v)
+         for i, v in enumerate([None, 1.0, 50.0, 100.0, 0.0])],
+        "k string, ts timestamp, v double",
+    )
+    present = nulls.where(F.col("v").isNotNull())
+    for compress, values in (
+        (deadband_compress, [1.0, 50.0, 100.0, 0.0]),
+        (swinging_door_compress, [1.0, 100.0, 0.0]),  # 50 lies on 1 → 100
+    ):
+        kept = batch(compress(nulls, "k", "ts", "v", epsilon=2.0))
+        assert kept == batch(compress(present, "k", "ts", "v", epsilon=2.0))
+        assert [r[2] for r in sorted(kept, key=lambda r: r[1])] == values
 
 
 class _CaptureGroupBy:
