@@ -7,7 +7,7 @@ Usage:
 Environment: $SPARK_GRAFT_SF_DIR picks the dataset directory and
 $SPARK_GRAFT_CPUS the local core count.
 Single-repeat numbers: good for ranking offenders, not for A/B calls
-(see OPTIMIZATION_r11.md's noise discipline).
+(see history/OPTIMIZATION_r11.md's noise discipline).
 """
 
 from __future__ import annotations

@@ -13,7 +13,6 @@ from .vectors import (
 from .text import (
     char_ngrams,
     punct_ratio,
-    simhash64,
     stopword_ratio,
     token_count,
     tokens,
@@ -37,5 +36,4 @@ __all__ = [
     "stopword_ratio",
     "word_shingles",
     "char_ngrams",
-    "simhash64",
 ]

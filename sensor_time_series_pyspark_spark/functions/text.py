@@ -207,52 +207,6 @@ def fingerprint64(text: Column | str) -> Column:
     return F.xxhash64(norm)
 
 
-def simhash64(text: Column | str, k: int = 1) -> Column:
-    """64-bit SimHash over (k-word) shingle hashes, as pure column
-    algebra: per shingle take xxhash64, then for each of 64 bit
-    positions sum +1/-1 votes and emit the sign bit.
-
-    Near-duplicate docs differ in few bit positions (small Hamming
-    distance). Used by operators/dedup.py:simhash_near_duplicates.
-
-    Expression-convenience form; hot paths project shingles into a
-    column and call :func:`simhash64_from_shingles` (same free-variable
-    re-evaluation caveat as word_shingles).
-    """
-    return simhash64_from_shingles(word_shingles(text, k))
-
-
-def simhash64_from_shingles(shingles: Column) -> Column:
-    """SimHash core over a pre-materialized shingle-array column."""
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-
-    def _bitvotes(h):
-        # per-shingle ±1 vote vector for all 64 bit positions at once
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1))
-                for b in range(64)
-            ]
-        )
-
-    # ONE pass over the shingle array accumulating a 64-wide vote array
-    # (64 separate F.aggregate calls would rescan the array 64x).
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(acc, _bitvotes(h), lambda a, v: a + v),
-    )
-    bitvals = F.array(
-        *[F.lit(2 ** b if b < 63 else -(2 ** 63)).cast("long") for b in range(64)]
-    )
-    signed = F.zip_with(
-        votes, bitvals, lambda v, bit: F.when(v > 0, bit).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(signed, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 # PII patterns, applied in order. Deliberately RE2-compatible (no
 # backreferences, no lookaround) so the exact same pattern strings run
 # identically under Java regex (Spark) and RE2 (DuckDB/Go tooling) —

@@ -28,4 +28,4 @@ __all__ = [
     "evaluate_regression",
     "feature_importances",
 ]
-from .stats import correlation_matrix, dimension_stats, summarize_vectors
+from .stats import correlation_matrix, dimension_stats

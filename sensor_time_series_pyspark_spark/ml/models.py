@@ -34,6 +34,25 @@ def ses(x: np.ndarray, h: int, alpha: float = 0.3) -> tuple[np.ndarray, np.ndarr
     return fc, se
 
 
+def _sequential_std(resid: list[float]) -> float:
+    """Population std via explicit SEQUENTIAL two-pass folds (not
+    np.std, whose 8-way-unrolled pairwise summation is a private
+    accumulation order): left-to-right sums are reproducible by any
+    engine's sequential fold, which is what lets the q24 and q300
+    oracles replicate the Holt recursions bit-for-bit in a recursive
+    CTE. 0.0 for no residuals."""
+    if not resid:
+        return 0.0
+    m = 0.0
+    for r in resid:
+        m += r
+    m /= len(resid)
+    ss = 0.0
+    for r in resid:
+        ss += (r - m) * (r - m)
+    return float(np.sqrt(ss / len(resid)))
+
+
 def holt(
     x: np.ndarray, h: int, alpha: float = 0.3, beta: float = 0.1
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -47,20 +66,7 @@ def holt(
         new_level = alpha * v + (1 - alpha) * (level + trend)
         trend = beta * (new_level - level) + (1 - beta) * trend
         level = new_level
-    # sequential two-pass std (same engine-portability rationale as
-    # holt_winters below: np.std's pairwise accumulation order is not
-    # reproducible by a SQL fold; left-to-right is)
-    if resid:
-        m = 0.0
-        for r in resid:
-            m += r
-        m /= len(resid)
-        ss = 0.0
-        for r in resid:
-            ss += (r - m) * (r - m)
-        sigma = float(np.sqrt(ss / len(resid)))
-    else:
-        sigma = 0.0
+    sigma = _sequential_std(resid)
     steps = np.arange(1, h + 1)
     fc = level + steps * trend
     se = sigma * np.sqrt(steps)
@@ -146,22 +152,7 @@ def holt_winters(
         trend = beta * (new_level - level) + (1 - beta) * trend
         season[i % period] = gamma * (v - new_level) + (1 - gamma) * s
         level = new_level
-    # population std via explicit SEQUENTIAL two-pass folds (not
-    # np.std, whose 8-way-unrolled pairwise summation is a private
-    # accumulation order): left-to-right sums are reproducible by any
-    # engine's sequential fold, which is what lets the q300 oracle
-    # replicate this recursion bit-for-bit in a recursive CTE.
-    if resid:
-        m = 0.0
-        for r in resid:
-            m += r
-        m /= len(resid)
-        ss = 0.0
-        for r in resid:
-            ss += (r - m) * (r - m)
-        sigma = float(np.sqrt(ss / len(resid)))
-    else:
-        sigma = 0.0
+    sigma = _sequential_std(resid)
     steps = np.arange(1, h + 1)
     n = len(x)
     fc = np.array(

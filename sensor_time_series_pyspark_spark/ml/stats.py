@@ -7,11 +7,11 @@ Two layers with different portability contracts:
   q120), one shuffle on the (tiny) dimension key. This is the
   normalization-constant pass a feature pipeline runs before scaling
   embeddings.
-- ``correlation_matrix`` / ``summarize_vectors``: the `pyspark.ml.stat`
-  surface (Correlation, Summarizer) over the same data — JVM BLAS-side,
-  double accumulation (fast, NOT bit-portable; gated by numpy-compared
-  tests instead of a SQL oracle). Use these at 100 TB where the
-  d×d matrix per partition beats a d²-row shuffle.
+- ``correlation_matrix``: the `pyspark.ml.stat.Correlation` surface
+  over the same data — JVM BLAS-side, double accumulation (fast, NOT
+  bit-portable; gated by numpy-compared tests instead of a SQL
+  oracle). Use it at 100 TB where the d×d matrix per partition beats a
+  d²-row shuffle.
 """
 
 from __future__ import annotations
@@ -97,34 +97,3 @@ def correlation_matrix(
         (i, j, float(arr[i, j])) for i in range(d) for j in range(i, d)
     ]
     return df.sparkSession.createDataFrame(rows, "i int, j int, corr double")
-
-
-def summarize_vectors(
-    df: DataFrame,
-    vec_col: str,
-) -> DataFrame:
-    """Per-dimension mean/variance/min/max via
-    ``pyspark.ml.stat.Summarizer`` (one pass, JVM-side accumulators),
-    flattened to (dim, mean, variance, min_val, max_val) rows."""
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.stat import Summarizer
-
-    vecs = df.select(array_to_vector(F.col(vec_col)).alias("__v"))
-    row = vecs.select(
-        Summarizer.metrics("mean", "variance", "min", "max").summary(
-            F.col("__v")
-        ).alias("s")
-    ).head()["s"]
-    mean, var, mn, mx = (
-        row["mean"].toArray(),
-        row["variance"].toArray(),
-        row["min"].toArray(),
-        row["max"].toArray(),
-    )
-    rows = [
-        (i, float(mean[i]), float(var[i]), float(mn[i]), float(mx[i]))
-        for i in range(len(mean))
-    ]
-    return df.sparkSession.createDataFrame(
-        rows, "dim int, mean double, variance double, min_val double, max_val double"
-    )

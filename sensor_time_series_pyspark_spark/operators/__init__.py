@@ -39,10 +39,8 @@ from .dedup import (
     jaccard_pairs_prefix,
     levenshtein_pairs,
     minhash_coeffs,
-    minhash_lsh_pairs,
     minhash_pairs,
     shingle_id_portable,
-    simhash_pairs,
     simhash_pairs_portable,
     spread,
 )
@@ -51,7 +49,6 @@ from .similarity import (
     ivf_topk_cosine,
     ivf_topk_cosine_pivots,
     quantize_vec,
-    signed_random_projection,
     srp_planes_rademacher,
     srp_signature_portable,
     topk_cosine,
@@ -73,7 +70,6 @@ from .viz import m4_downsample
 from .compress import deadband_compress, swinging_door_compress
 from .bloomjoin import bloom_bitmap, bloom_prune, bloom_semi_join
 from .sketches import hll_partials, hll_rollup, topk_partials, topk_rollup
-from .graph import pagerank
 from .windows import rolling_corr
 from .quantiles import weighted_median
 from .sampling import stratified_hash_sample
@@ -125,10 +121,8 @@ __all__ = [
     "jaccard_pairs",
     "jaccard_pairs_prefix",
     "minhash_coeffs",
-    "minhash_lsh_pairs",
     "minhash_pairs",
     "shingle_id_portable",
-    "simhash_pairs",
     "simhash_pairs_portable",
     "spread",
     "embedding_near_dup_pairs",
@@ -137,7 +131,6 @@ __all__ = [
     "ivf_topk_cosine_pivots",
     "quantize_vec",
     "brp_lsh_join",
-    "signed_random_projection",
     "srp_planes_rademacher",
     "srp_signature_portable",
     "interval_join",
@@ -168,7 +161,6 @@ __all__ = [
     "bloom_semi_join",
     "hll_partials",
     "hll_rollup",
-    "pagerank",
     "rolling_corr",
     "weighted_median",
     "stratified_hash_sample",

@@ -6,11 +6,13 @@ Four tiers, cheapest first:
 2. ngram/word Jaccard — inverted-index join: explode tokens, join on
    token, count shared per pair. Never materializes the full cross
    product; prune high-document-frequency tokens at scale.
-3. MinHash LSH  — pyspark.ml MinHashLSH (seeded) over hashed shingle
-   vectors; approxSimilarityJoin only compares within-bucket pairs.
-4. SimHash      — 64-bit signature, banded into 16-bit chunks: near-dups
-   (hamming ≤ t) must collide on ≥1 band when t < 64/bands, so the
-   candidate join is an equi-join on (band_id, band_value).
+3. MinHash LSH  — ``minhash_pairs``: affine-permutation minima over
+   portable shingle ids, one groupBy per signature, banded into
+   equi-join keys; only docs sharing a band key are compared.
+4. SimHash      — ``simhash_pairs_portable``: 48-bit majority-vote
+   signature, banded into 6-bit chunks: near-dups (hamming ≤ t) must
+   collide on ≥1 band when t < bands, so the candidate join is an
+   equi-join on (band_id, band_value).
 
 All candidate-pair stages verify with an exact measure before
 reporting — LSH/banding only bound recall, never precision.
@@ -21,14 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    shingles_from_tokens,
-    simhash64_from_shingles,
-    tokens,
-)
+from ..functions.text import shingles_from_tokens, tokens
 
 
-def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition before CPU-heavy per-row expression work (shingling,
     signature computation, text scoring). A small parquet source arrives
     as ONE input split, which serializes the whole expression stage on
@@ -36,12 +34,7 @@ def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     the raw rows and unlocks full-cluster parallelism for everything
     after. At real scale the scan has many splits and this becomes a
     no-op decision: call it only when expression cost ≫ row width."""
-    n = parallelism or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
-
-
-# internal alias kept for the call sites below
-_spread = spread
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -68,7 +61,6 @@ def jaccard_pairs(
     threshold: float = 0.5,
     shingle_k: int = 1,
     max_token_df: int | None = None,
-    parallelism: int | None = None,
     unit: str = "word",
     persist_index: bool = False,
 ) -> DataFrame:
@@ -88,7 +80,7 @@ def jaccard_pairs(
     # row (functions/text.py:shingles_from_tokens). A bound attribute
     # read per element is free.
     if unit == "word":
-        base = _spread(df, parallelism).select(
+        base = spread(df).select(
             F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
         )
         shingles = (
@@ -101,7 +93,7 @@ def jaccard_pairs(
 
         # char_ngrams' free variable is the plain text column (attribute
         # read + substr per index) — no quadratic blowup, keep one step.
-        base = _spread(df, parallelism).select(
+        base = spread(df).select(
             F.col(id_col).alias("id"), char_ngrams(text_col, shingle_k).alias("__toks")
         )
         shingles = F.col("__toks")
@@ -179,7 +171,6 @@ def jaccard_pairs_prefix(
     text_col: str,
     threshold: float = 0.5,
     shingle_k: int = 3,
-    parallelism: int | None = None,
     unit: str = "word",
 ) -> DataFrame:
     """Exact Jaccard pairs via PREFIX FILTERING (PPJoin family,
@@ -202,7 +193,7 @@ def jaccard_pairs_prefix(
 
     Compared to ``jaccard_pairs`` (full inverted index, counts overlap
     inside the join): fewer candidates but two extra hash joins to
-    fetch arrays. MEASURED VERDICT (round 9, RACE_JACCARD_r09.json /
+    fetch arrays. MEASURED VERDICT (round 9, history/RACE_JACCARD_r09.json /
     SCALING.md): on 5k/50k/500k-doc WORD-shingle corpora at t=0.2 and
     t=0.5 the inverted index wins every leg by 2.8-14.3x, and the gap
     WIDENS with corpus size — the canonical-order construction is a
@@ -219,7 +210,7 @@ def jaccard_pairs_prefix(
     jaccard_pairs.
     """
     if unit == "word":
-        base = _spread(df, parallelism).select(
+        base = spread(df).select(
             F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
         )
         sh = (
@@ -230,7 +221,7 @@ def jaccard_pairs_prefix(
     elif unit == "char":
         from ..functions.text import char_ngrams
 
-        base = _spread(df, parallelism).select(
+        base = spread(df).select(
             F.col(id_col).alias("id"),
             char_ngrams(text_col, shingle_k).alias("__toks"),
         )
@@ -378,7 +369,6 @@ def minhash_pairs(
     n_hashes: int = 16,
     n_bands: int = 8,
     seed: int = 42,
-    parallelism: int | None = None,
     persist_sets: bool = True,
     sid: str = "portable",
 ) -> DataFrame:
@@ -408,7 +398,7 @@ def minhash_pairs(
     r = n_hashes // n_bands
     a_coef, b_coef = minhash_coeffs(n_hashes, seed)
 
-    base = _spread(df, parallelism).select(
+    base = spread(df).select(
         F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
     )
     sh = (
@@ -495,47 +485,6 @@ def minhash_pairs(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    jaccard_dist_threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    shingle_k: int = 2,
-    seed: int = 42,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Approximate near-dup pairs via MinHash LSH
-    (pyspark.ml.feature.MinHashLSH — SURVEY.md §4: no custom Catalyst
-    work needed). Shingles → binary HashingTF vector → seeded MinHash
-    signatures → approxSimilarityJoin compares only candidate buckets.
-
-    Output: id_a, id_b (a < b), jaccard_dist (exact on hashed sets).
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = _spread(df, parallelism).select(
-        F.col(id_col).alias("id"),
-        shingles_from_tokens(tokens(text_col), shingle_k).alias("shingles"),
-    ).where(F.size("shingles") > 0)
-    tf = HashingTF(
-        inputCol="shingles", outputCol="vec", numFeatures=num_features, binary=True
-    )
-    vecs = tf.transform(sh)
-    lsh = MinHashLSH(inputCol="vec", outputCol="sig", numHashTables=num_hash_tables, seed=seed)
-    model = lsh.fit(vecs)
-    joined = model.approxSimilarityJoin(vecs, vecs, jaccard_dist_threshold, distCol="jaccard_dist")
-    return (
-        joined.where(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.col("jaccard_dist"),
-        )
-    )
-
-
 def simhash_pairs_portable(
     df: DataFrame,
     id_col: str,
@@ -544,7 +493,6 @@ def simhash_pairs_portable(
     shingle_k: int = 2,
     n_bits: int = 48,
     n_bands: int = 8,
-    parallelism: int | None = None,
     persist_sigs: bool = True,
 ) -> DataFrame:
     """Engine-portable SimHash near-dup pairs: signatures are per-bit
@@ -553,9 +501,9 @@ def simhash_pairs_portable(
     bit_count(xor) verify all reproduce in ANSI SQL — q21 is
     differentially tested against DuckDB end-to-end.
 
-    Same scale shape as simhash_pairs (one groupBy builds all vote
-    counters map-side-combinably; candidates come from a band
-    equi-join, never a cross join). With n_bands=8 over 48 bits any
+    Scale shape: one groupBy builds all vote counters
+    map-side-combinably; candidates come from a band equi-join, never
+    a cross join. With n_bands=8 over 48 bits any
     pair with hamming ≤ 7 shares an intact 6-bit band (pigeonhole), so
     recall is exact for max_hamming ≤ 7.
 
@@ -564,7 +512,7 @@ def simhash_pairs_portable(
     if n_bits % n_bands != 0:
         raise ValueError("n_bits must divide evenly into n_bands")
     band_width = n_bits // n_bands
-    base = _spread(df, parallelism).select(
+    base = spread(df).select(
         F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
     )
     sh = (
@@ -635,67 +583,6 @@ def simhash_pairs_portable(
         .distinct()
     )
     hamming = F.bit_count(F.expr("sig_a ^ sig_b")).cast("int")
-    return (
-        cand.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 8,
-    shingle_k: int = 1,
-    n_bands: int = 8,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit signature (pure column algebra,
-    functions/text.py:simhash64), banded equi-join for candidates,
-    exact hamming (bit_count(xor)) verify.
-
-    With n_bands=8 (8 bits each), any pair with hamming ≤ 7 shares ≥1
-    intact band (pigeonhole) → recall is exact for max_hamming ≤ 7,
-    probabilistic above. Output: id_a, id_b, hamming.
-    """
-    sigs = _spread(df, parallelism).select(
-        F.col(id_col).alias("id"),
-        simhash64_from_shingles(
-            shingles_from_tokens(tokens(text_col), shingle_k)
-        ).alias("sig"),
-    )
-    band_width = 64 // n_bands
-    bands = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.shiftrightunsigned(F.col("sig"), i * band_width)
-                        .bitwiseAND(F.lit((1 << band_width) - 1))
-                        .alias("band_val"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "sig", "band.band_id", "band.band_val")
-    a = bands.select(
-        "band_id", "band_val", F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
-    )
-    b = bands.select(
-        "band_id", "band_val", F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-    )
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
     return (
         cand.withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
@@ -869,7 +756,7 @@ def dedup_clusters(
     dst: str = "id_b",
 ) -> DataFrame:
     """Near-dup cluster assignment from a similarity-pair list (the
-    output of jaccard_pairs / minhash_lsh_pairs / simhash_pairs /
+    output of jaccard_pairs / minhash_pairs / simhash_pairs_portable /
     embedding_near_dup_pairs): each document that appears in at least
     one pair gets the cluster id = lowest doc id in its connected
     component — consistent with exact_dedup's lowest-id-wins canonical
@@ -894,7 +781,7 @@ def embedding_near_dup_pairs(
     Baseline implementation is the exact block-join (self-join on a
     norm-bucketed key would prune little for cosine, so this is the
     honest O(n²/2) form — fine to ~10⁵ rows). The scale path is
-    random-hyperplane LSH (similarity.py:signed_random_projection) to
+    random-hyperplane LSH (similarity.py:srp_signature_portable) to
     generate candidates, with this same exact cosine as the verifier.
     Output: id_a, id_b, cosine.
     """

@@ -153,7 +153,7 @@ def sessionize_auto(
 
 
 #: measured corpus-size breakeven for the set-similarity join
-#: (RACE_BANDING_r10.json): the exact inverted index wins every leg up
+#: (history/RACE_BANDING_r10.json): the exact inverted index wins every leg up
 #: to 50k distinct docs (1.4-2.0x), the banding-first pipeline wins at
 #: 500k (2.1x at t=0.5, 1.35x at t=0.8); log-log interpolation of the
 #: two growth exponents puts the crossing at ~105k docs (t=0.5) and
@@ -180,7 +180,6 @@ def jaccard_pairs_auto(
     threshold: float = 0.5,
     shingle_k: int = 1,
     max_token_df: int | None = None,
-    parallelism: int | None = None,
     n_hashes: int = 16,
     n_bands: int = 8,
     recall_floor: float = 0.95,
@@ -191,7 +190,7 @@ def jaccard_pairs_auto(
     inverted index (``jaccard_pairs``) and the banding-first pipeline
     (``minhash_pairs`` with the fast sid: signatures -> banded-LSH
     candidates -> exact verify) by the measured corpus-size crossover
-    (RACE_BANDING_r10.json — the round-9 scaling curve's steepest
+    (history/RACE_BANDING_r10.json — the round-9 scaling curve's steepest
     headline, closed by racing the two at 5k/50k/500k docs).
 
     The contract guard comes FIRST: banding bounds recall by
@@ -221,7 +220,6 @@ def jaccard_pairs_auto(
         threshold=threshold,
         shingle_k=shingle_k,
         max_token_df=max_token_df,
-        parallelism=parallelism,
     )
     if banding_recall(threshold, n_hashes, n_bands) < recall_floor:
         return exact()
@@ -236,7 +234,6 @@ def jaccard_pairs_auto(
         shingle_k=shingle_k,
         n_hashes=n_hashes,
         n_bands=n_bands,
-        parallelism=parallelism,
         sid="fast",
     )
 

@@ -1,7 +1,8 @@
-"""Iterative graph algorithms over edge DataFrames (PageRank).
+"""Iterative graph algorithms over edge DataFrames (PageRank, triangle
+count, label propagation, BFS hop distance, k-core peeling).
 
-Complements the near-dup clustering in dedup.py (connected components,
-label propagation): PageRank ranks nodes by link structure — in a
+Complements the near-dup clustering in dedup.py (connected
+components): PageRank ranks nodes by link structure — in a
 training-data pipeline the standard use is source/domain authority
 scoring over a hyperlink or citation graph (a quality prior for
 document filtering, cf. the Common Crawl-style pipelines in PAPERS.md).
@@ -9,113 +10,20 @@ document filtering, cf. the Common Crawl-style pipelines in PAPERS.md).
 Spark shape: the degree table and rank table are keyed by node; every
 iteration is ONE shuffle join (ranks ⋈ edges on src, pre-partitioned so
 successive iterations reuse the partitioning) + one aggregation on dst.
-Iteration count is fixed and small (10-20); lineage is cut with
+Iteration count is fixed and small; lineage is cut with
 localCheckpoint every few rounds like dedup.connected_components, so
 the plan does not grow unboundedly.
+
+Every operator here runs Spark jobs when it is CALLED, not when its
+result is consumed: the iterations end in an eager
+``localCheckpoint`` (or a convergence count), so the loop invariants
+they persist can be released before returning.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 10,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """PageRank over a directed edge list (duplicates collapse first).
-
-    Dangling nodes (no out-edges) redistribute their mass uniformly —
-    the standard correction, so total mass stays n_nodes (within float
-    rounding) every iteration; a convergence/mass test pins this.
-
-    Output: node, rank (normalized so ranks sum to n_nodes).
-    """
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # out-degree per source; broadcast-sized graphs still go through the
-    # same joins — Catalyst/AQE picks the physical strategy.
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # e / nodes / deg are loop INVARIANTS joined every iteration —
-    # without a persist each round re-runs the scan + distinct + degree
-    # aggregate, and rounds between checkpoints nest that recompute.
-    # Materializing the invariants once is what a production PageRank
-    # does with its adjacency table.
-    from pyspark import StorageLevel
-
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    deg = deg.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        n_nodes = nodes.count()
-
-        ranks = nodes.withColumn("rank", F.lit(1.0))
-        for i in range(n_iter):
-            with_deg = ranks.join(
-                deg, ranks["node"] == deg["src"], "left"
-            ).select(
-                ranks["node"], "rank", F.col("deg")
-            )
-            # mass from dangling nodes, spread uniformly — kept INSIDE
-            # the plan as a one-row broadcast (a per-round collect()
-            # would run a full extra job per iteration and force
-            # lineage recompute between checkpoints; measured ~2x on
-            # the whole operator)
-            dangling = with_deg.where(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__m")
-            )
-            contribs = (
-                with_deg.where(F.col("deg").isNotNull())
-                .join(e, with_deg["node"] == e["src"])
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("deg")).alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("c"))
-            )
-            base = (
-                F.lit(1.0 - damping)
-                + F.lit(damping) * F.col("__m") / F.lit(float(n_nodes))
-            )
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    (
-                        base + F.lit(damping) * F.coalesce("c", F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        # materialize the result BEFORE releasing the loop invariants
-        # (its lineage still references them when the final rounds fall
-        # between checkpoints)
-        ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        # the invariants are CacheManager entries, not GC-reclaimed —
-        # without this a long-lived session invoking graph operators
-        # repeatedly accumulates executor memory/disk blocks
-        for fr in (e, nodes, deg):
-            fr.unpersist()
-    return ranks
 
 
 def pagerank_fixedpoint(
@@ -127,25 +35,30 @@ def pagerank_fixedpoint(
     scale: int = 10**12,
     checkpoint_every: int = 3,
 ) -> DataFrame:
-    """PageRank in EXACT integer fixed-point — the engine-portable
-    twin of ``pagerank`` (round-10 promotion path for q98): ranks are
-    bigints scaled by ``scale`` (default 1e12, i.e. picodecimal), the
-    damping multiply is ``*damping_pct // 100``, and every per-edge
-    contribution is an integer division ``rank div out_degree``. All
-    sums are order-insensitive integer sums, so a fixed iteration
-    count reproduces bit-identically in ANY engine — a DuckDB twin is
-    just the same update unrolled (windows_signal.py:_PR_FP_SQL).
+    """PageRank over a directed edge list (duplicates collapse first),
+    in EXACT integer fixed-point (q98): ranks are bigints scaled by
+    ``scale`` (default 1e12, i.e. picodecimal), the damping multiply
+    is ``*damping_pct // 100``, and every per-edge contribution is an
+    integer division ``rank div out_degree``. All sums are
+    order-insensitive integer sums, so a fixed iteration count
+    reproduces bit-identically in ANY engine — a DuckDB twin is just
+    the same update unrolled (windows_signal.py:_PR_FP_SQL).
 
-    Semantics note: the floors truncate ~1 unit per node per division
-    (relative error ~n_iter/scale ≈ 6e-12 vs the float operator —
-    far below any ranking-relevant gap); dangling mass redistributes
-    uniformly like the float variant, also floored. Headroom: a hub's
+    Dangling nodes (no out-edges) redistribute their mass uniformly —
+    the standard correction, so total mass stays n_nodes (within the
+    floors) every iteration. The floors truncate ~1 unit per node per
+    division (relative error ~n_iter/scale ≈ 6e-12 against float
+    PageRank — far below any ranking-relevant gap). Headroom: a hub's
     incoming sum is bounded by total mass n*scale; the damping
     multiply adds a factor damping_pct — keep n*scale*damping_pct
     under 2^63 (~1e8 nodes at the default scale; past that, lower
     ``scale``). Spark's bigint sum wraps silently past that bound
     while the twin's HUGEINT->BIGINT cast errors loudly — the same
     documented-headroom contract as q598.
+
+    Runs its jobs when called: the last round is materialized with an
+    eager ``localCheckpoint`` so the persisted loop invariants can be
+    released before returning.
 
     Output: node, rank_fp (bigint, scaled), rank (double, ONE final
     division — the only float in the pipeline).
@@ -163,7 +76,9 @@ def pagerank_fixedpoint(
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # same loop-invariant materialization as the float pagerank
+    # e / nodes / deg are loop INVARIANTS joined every iteration —
+    # without a persist each round re-runs the scan + distinct + degree
+    # aggregate, and rounds between checkpoints nest that recompute.
     from pyspark import StorageLevel
 
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
@@ -205,10 +120,14 @@ def pagerank_fixedpoint(
             )
             if checkpoint_every and (i + 1) % checkpoint_every == 0:
                 ranks = ranks.localCheckpoint(eager=True)
-        # materialize before releasing the loop invariants (same
-        # contract as pagerank)
+        # materialize the result BEFORE releasing the loop invariants
+        # (its lineage still references them when the final rounds fall
+        # between checkpoints)
         ranks = ranks.localCheckpoint(eager=True)
     finally:
+        # the invariants are CacheManager entries, not GC-reclaimed —
+        # without this a long-lived session invoking graph operators
+        # repeatedly accumulates executor memory/disk blocks
         for fr in (e, nodes, deg):
             fr.unpersist()
     return ranks.select(
@@ -240,6 +159,10 @@ def triangle_count(
     ~10^12 wedges at that hub; degree-ordering caps it at ~m.
     ``orient='id'`` skips the degree pass — fine for near-regular
     graphs, and the count is identical either way.
+
+    Runs its jobs when called: the one-row count is materialized with
+    an eager ``localCheckpoint`` so the persisted oriented edges can be
+    released before returning.
 
     Output: one row, n_triangles (long).
     """
@@ -316,7 +239,12 @@ def label_propagation(
     One join + two aggregates per round, all keyed on node ids —
     the connected-components shape with a frequency vote instead of a
     min. Fixed small iteration count; lineage cut by localCheckpoint
-    like pagerank. Communities are label ids (a member node's id).
+    like pagerank_fixedpoint. Communities are label ids (a member
+    node's id).
+
+    Runs its jobs when called: the last round is materialized with an
+    eager ``localCheckpoint`` so the persisted edge list can be
+    released before returning.
 
     Output: node, label.
     """
@@ -330,7 +258,8 @@ def label_propagation(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     # the symmetrized edge list is a loop invariant joined every round
-    # — materialize it once (same rationale as pagerank/bfs_hops)
+    # — materialize it once (same rationale as pagerank_fixedpoint /
+    # bfs_hops)
     from pyspark import StorageLevel
 
     both = both.persist(StorageLevel.MEMORY_AND_DISK)
@@ -383,7 +312,7 @@ def bfs_hops(
     once per endpoint and per-round work shrinks as the frontier
     saturates — the standard Pregel BFS schedule expressed as DataFrame
     joins. One equi-join + one anti-join + one distinct per round, all
-    keyed on node ids; lineage cut by localCheckpoint like pagerank.
+    keyed on node ids; lineage cut by localCheckpoint every level.
     Unreached nodes are absent from the output (callers outer-join and
     fill if they need an explicit infinity).
 
@@ -463,8 +392,8 @@ def kcore(
     falls monotonically; convergence is detected by comparing the
     surviving-edge count (a cheap count on the already-shrunk frame)
     and the loop exits early, with ``max_rounds`` as the lineage
-    bound. localCheckpoint cuts the iterative plan like pagerank /
-    connected_components.
+    bound. localCheckpoint cuts the iterative plan like
+    pagerank_fixedpoint / connected_components.
 
     Every peel round is eagerly checkpointed: the convergence count
     fully evaluates each round anyway, so sparser cadences re-ran

@@ -6,15 +6,14 @@
   few queries this is a single scan — the right plan.
 - ``brp_lsh_join``: bucketed random-projection LSH (pyspark.ml) for
   radius joins at corpus×corpus scale.
-- ``signed_random_projection``: 64-bit cosine-LSH signature (random
-  hyperplane sign bits) as a column, for banded candidate generation —
-  pairs with small signature hamming have high cosine w.h.p.
+- ``srp_signature_portable``: cosine-LSH signature (±1 hyperplane sign
+  bits over integer-scaled components) as a column, for banded
+  candidate generation — pairs with small signature hamming have high
+  cosine w.h.p.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -90,34 +89,6 @@ def brp_lsh_join(
         F.col("datasetB.id").alias("id_b"),
         F.col("euclidean_dist"),
     )
-
-
-def signed_random_projection(
-    df: DataFrame, vec_col: str, dim: int, n_bits: int = 64, seed: int = 42
-) -> DataFrame:
-    """Append a 64-bit cosine-LSH signature column ``srp_sig``: sign
-    bits of dot products with ``n_bits`` fixed random hyperplanes.
-
-    Hyperplanes are generated driver-side from a seeded RNG and folded
-    into the plan as array literals, so the signature is pure JVM
-    column algebra (no Python worker at scan time); P(bit differs) =
-    angle/π, so hamming(sig_a, sig_b) estimates cosine distance.
-    Feed the result to dedup.simhash-style banding for candidates.
-    """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_bits, dim))
-    sig = F.lit(0).cast("long")
-    v = F.col(vec_col)
-    for b in range(n_bits):
-        plane = F.array(*[F.lit(float(x)) for x in planes[b]])
-        dot = F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit_val = F.lit(2**b if b < 63 else -(2**63)).cast("long")
-        sig = sig + F.when(dot > 0, bit_val).otherwise(F.lit(0).cast("long"))
-    return df.withColumn("srp_sig", sig)
 
 
 def srp_planes_rademacher(dim: int, n_bits: int, seed: int = 42) -> list[list[int]]:
@@ -360,250 +331,6 @@ def ivf_topk_cosine_pivots(
     )
 
 
-def pq_codebook(
-    corpus: DataFrame,
-    vec_col: str,
-    m: int = 8,
-    ks: int = 16,
-    seed: int = 42,
-    max_iter: int = 20,
-    order_col: str | None = None,
-    max_train: int = 65536,
-) -> DataFrame:
-    """Train a product-quantization codebook (Jégou et al. 2011): the
-    vector is split into ``m`` contiguous subvectors; each subspace
-    gets its own ``ks``-centroid k-means. The codebook is tiny (m·ks
-    rows) and broadcast everywhere downstream.
-
-    Training runs DRIVER-SIDE on a bounded sample (``max_train`` rows,
-    deterministic when ``order_col`` is given — rows are taken in
-    md5-hash order of that column, the repo's hash-sampling
-    convention): PQ codebooks are always trained on a sample at scale,
-    the sample is small by construction, and a seeded numpy Lloyd loop
-    is ~20x faster end-to-end than m distributed KMeans fits whose
-    per-job overhead dwarfs the arithmetic (measured 37s -> 2s at
-    sf0.01). The ENCODE and SCAN stages — the parts that touch the
-    full corpus — stay distributed (pq_encode / pq_topk_cosine).
-
-    Vectors are L2-normalized BEFORE splitting, so PQ inner products
-    approximate cosine directly.
-
-    Output: (sub, code, centroid: array<double>) — m·ks rows.
-    """
-    d = len(corpus.select(vec_col).first()[0])
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    base = corpus.where(l2_norm(vec_col) > 0)
-    if order_col is not None:
-        base = base.orderBy(F.md5(F.col(order_col).cast("string")))
-    rows = base.select(vec_col).limit(max_train).collect()
-    mat = np.array([r[0] for r in rows], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    rng = np.random.default_rng(seed)
-    books = []
-    for sub in range(m):
-        x = mat[:, sub * dsub:(sub + 1) * dsub]
-        k = min(ks, x.shape[0])
-        centers = x[rng.choice(x.shape[0], size=k, replace=False)].copy()
-        for _ in range(max_iter):
-            d2 = (
-                (x * x).sum(1, keepdims=True)
-                - 2.0 * x @ centers.T
-                + (centers * centers).sum(1)
-            )
-            assign = d2.argmin(1)
-            moved = False
-            for c in range(k):
-                members = x[assign == c]
-                if len(members):
-                    nc = members.mean(0)
-                    if not np.array_equal(nc, centers[c]):
-                        centers[c] = nc
-                        moved = True
-            if not moved:
-                break
-        # pad duplicate centroids if the sample had < ks distinct rows
-        while centers.shape[0] < ks:
-            centers = np.vstack([centers, centers[0]])
-        books.extend(
-            (sub, i, [float(v) for v in centers[i]]) for i in range(ks)
-        )
-    return corpus.sparkSession.createDataFrame(
-        books, "sub int, code int, centroid array<double>"
-    )
-
-
-def pq_encode(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebook: DataFrame,
-) -> DataFrame:
-    """Assign every vector its m nearest-centroid codes — the 100 TB
-    compression step (d floats → m bytes, e.g. 64·4 B → 8 B).
-
-    The codebook collapses to a driver-side numpy array and the
-    assignment runs as ONE Arrow-batched pandas UDF (vectorized argmin
-    over all rows × all centroids per subspace) — map-side only, no
-    shuffle, no join. Zero-norm vectors are dropped (no cosine).
-
-    Output: (id, codes: array<int>).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    rows = codebook.orderBy("sub", "code").collect()
-    m = 1 + max(r["sub"] for r in rows)
-    ks = 1 + max(r["code"] for r in rows)
-    cb = np.array(
-        [r["centroid"] for r in rows], dtype=np.float64
-    ).reshape(m, ks, -1)
-    dsub = cb.shape[2]
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(cb)
-
-    @pandas_udf("array<int>")
-    def encode(vs: pd.Series) -> pd.Series:
-        book = bc.value
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in vs])
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / norms
-        codes = np.empty((mat.shape[0], m), dtype=np.int32)
-        for s in range(m):
-            subm = mat[:, s * dsub:(s + 1) * dsub]
-            # (rows, ks) squared distances via ||a-b||² expansion
-            d2 = (
-                (subm * subm).sum(1, keepdims=True)
-                - 2.0 * subm @ book[s].T
-                + (book[s] * book[s]).sum(1)
-            )
-            codes[:, s] = d2.argmin(1)
-        return pd.Series(list(codes))
-
-    norm = l2_norm(vec_col)
-    return df.where(norm > 0).select(
-        F.col(id_col).alias("id"), encode(F.col(vec_col)).alias("codes")
-    )
-
-
-def pq_topk_cosine(
-    corpus: DataFrame,
-    queries: DataFrame,
-    corpus_id: str,
-    query_id: str,
-    vec_col: str,
-    k: int = 5,
-    m: int = 8,
-    ks: int = 16,
-    seed: int = 42,
-    oversample: int = 4,
-) -> DataFrame:
-    """Approximate top-k cosine via product quantization with
-    asymmetric distance computation (ADC): corpus vectors live only as
-    m-byte codes; each query precomputes an m·ks lookup table of
-    subvector dot products against the codebook, and scoring a corpus
-    row is m table lookups + adds — pure column algebra, no floats from
-    the corpus touched at query time.
-
-    ADC ranks are then REFINED: the top k·oversample shortlist per
-    query (a tiny fraction of the corpus) is re-scored with exact
-    cosine against the real vectors and the final top-k comes from
-    that — the standard PQ-scan + re-rank architecture (quantization
-    error only costs recall when a true neighbor falls outside the
-    shortlist, not when ADC misorders inside it). oversample=1 ⇒ raw
-    ADC ranking.
-
-    Spark shape at 100 TB: codes are built once (pq_encode, map-side)
-    and persisted; the per-query LUT is built JVM-side by joining the
-    broadcast codebook against the (few) queries and collapsing to ONE
-    flat array per query (in-aggregate sort — q161's mechanism); the
-    scan is then corpus-codes × broadcast-LUTs with an
-    F.aggregate(sequence, element_at) sum — whole-stage codegen, no
-    Python in the hot loop, no shuffle of the corpus. Ranking is the
-    same per-query window as topk_cosine.
-
-    Output: qid, cid, rank, score (approximate cosine).
-    """
-    book = pq_codebook(corpus, vec_col, m=m, ks=ks, seed=seed, order_col=corpus_id)
-    codes = pq_encode(corpus, corpus_id, vec_col, book)
-    dsub_expr = F.size("centroid")
-    qnorm = l2_norm(vec_col)
-    q = queries.where(qnorm > 0).select(
-        F.col(query_id).alias("qid"),
-        F.transform(F.col(vec_col), lambda x: x / qnorm).alias("__qv"),
-    )
-    # per (query, sub, code): dot(q_sub, centroid)
-    cells = q.crossJoin(F.broadcast(book)).select(
-        "qid",
-        "sub",
-        "code",
-        F.aggregate(
-            F.zip_with(
-                F.slice("__qv", F.col("sub") * dsub_expr + 1, dsub_expr),
-                F.col("centroid"),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("dot"),
-    )
-    # collapse to one flat LUT array per query, index = sub*ks + code
-    lut = cells.groupBy("qid").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct("sub", "code", "dot"))
-            ),
-            lambda s: s["dot"],
-        ).alias("lut")
-    )
-    scored = codes.crossJoin(F.broadcast(lut)).select(
-        "qid",
-        F.col("id").alias("cid"),
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, i: acc
-            + F.element_at(
-                F.col("lut"), (i * ks + F.element_at(F.col("codes"), i + 1) + 1)
-            ),
-        ).alias("score"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("cid"))
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k * max(1, oversample))
-    )
-    if oversample <= 1:
-        return shortlist.where(F.col("rank") <= k).select(
-            "qid", "cid", "rank", "score"
-        )
-    # exact re-rank of the shortlist only: join back the true vectors
-    # (shortlist is queries·k·oversample rows — negligible next to the
-    # corpus), recompute exact cosine, final top-k window.
-    cv = corpus.select(
-        F.col(corpus_id).alias("cid"), F.col(vec_col).alias("__cv")
-    )
-    qv = queries.select(
-        F.col(query_id).alias("qid"), F.col(vec_col).alias("__qv2")
-    )
-    exact = (
-        shortlist.select("qid", "cid")
-        .join(cv, "cid")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "cid",
-            cosine_similarity("__qv2", "__cv").alias("score"),
-        )
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("cid"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("qid", "cid", "rank", "score")
-    )
-
-
 def pq_topk_cosine_pivots(
     corpus: DataFrame,
     queries: DataFrame,
@@ -631,13 +358,12 @@ def pq_topk_cosine_pivots(
     k*oversample shortlist per query is bit-identical across engines;
     only the final exact-cosine re-rank of the tiny shortlist touches
     floats (cosine gaps >> float error within a fixed candidate set —
-    the q23/q47-proven epilogue). The KMeans-trained variant
-    (pq_topk_cosine) stays the learned-codebook tier; random/sampled
-    codebooks are a standard PQ baseline (the training is an accuracy
-    optimization, not a structural requirement).
+    the q23/q47-proven epilogue). Random/sampled codebooks are a
+    standard PQ baseline: KMeans training is an accuracy optimization,
+    not a structural requirement.
 
-    Scale shape: identical to pq_topk_cosine — codes build map-side
-    against the broadcast pivot table, the scan is corpus-codes x
+    Scale shape: codes build map-side against the broadcast pivot
+    table, the scan is corpus-codes x
     broadcast per-query integer LUT (whole-stage codegen, no corpus
     shuffle), the re-rank joins only queries*k*oversample rows back to
     real vectors.

@@ -544,9 +544,7 @@ def _q_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     (operators/dedup.py:minhash_pairs): md5-derived portable shingle
     ids + affine permutations mod 2^31-1 make every stage — signature,
     banding, candidate join, exact-Jaccard verify — reproducible in
-    ANSI SQL, so this is oracle-gated (upgraded from the round-1
-    rows-only pyspark.ml variant, which remains as
-    minhash_lsh_pairs for the VectorUDT surface)."""
+    ANSI SQL, so this is oracle-gated."""
     return minhash_pairs(
         _rep_docs(spark, sf), "doc_id", "text",
         threshold=0.35, shingle_k=2, n_hashes=16, n_bands=8,
@@ -557,9 +555,7 @@ def _q_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash banded near-dup pairs over exact-dedup reps
     (operators/dedup.py:simhash_pairs_portable): per-bit majority votes
     over 48-bit md5-derived shingle ids — signature, banding, and the
-    hamming verify all reproduce in ANSI SQL, so this is oracle-gated
-    (upgraded from round 1's rows-only xxhash64 variant, which remains
-    as simhash_pairs for 64-bit production signatures)."""
+    hamming verify all reproduce in ANSI SQL, so this is oracle-gated."""
     from sensor_time_series_pyspark_spark.operators import simhash_pairs_portable
 
     return simhash_pairs_portable(
@@ -733,10 +729,8 @@ def _q_srp_signature(spark: SparkSession, sf: str) -> DataFrame:
     """Signed-random-projection cosine-LSH signatures, engine-portable
     variant (operators/similarity.py:srp_signature_portable): ±1
     hyperplanes over integer-scaled components make every bit exact and
-    SQL-reproducible, so this is oracle-gated (upgraded from round 1's
-    rows-only float-plane variant, which remains as
-    signed_random_projection for 64-bit production signatures). Bands
-    of the signature feed the same candidate equi-join as SimHash."""
+    SQL-reproducible, so this is oracle-gated. Bands of the signature
+    feed the same candidate equi-join as SimHash."""
     from sensor_time_series_pyspark_spark.operators import srp_signature_portable
 
     emb = read_table(spark, sf, "embeddings")

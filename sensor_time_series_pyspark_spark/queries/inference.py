@@ -22,15 +22,16 @@ from sensor_time_series_pyspark_spark.sources.readers import read_table
 
 def _q_pagerank_gated(spark: SparkSession, sf: str) -> DataFrame:
     """Hash-gated PageRank (3 power iterations, d=0.85) on the brand
-    co-purchase graph — the ORDERED-FOLD twin of q98's general
-    operator (operators/graph.py:pagerank, rows-only because its
-    per-round aggregation sums double contributions in partition
-    order). Here each node's incoming mass folds in SOURCE-ID order
-    (sort_array + F.aggregate == DuckDB's ordered list_reduce), the
-    damping epilogue is the fixed chain base + 0.85·S, and the graph
-    is symmetric (outdeg ≥ 1 ⇒ no dangling mass), so three unrolled
-    iterations are bit-identical across engines. N and 1/N, 0.15/N
-    are each ONE double division. At 100 TB the shape is q98's: one
+    co-purchase graph in DOUBLE precision — the ordered-fold
+    counterpart of q98's integer fixed-point operator
+    (operators/graph.py:pagerank_fixedpoint). A float PageRank whose
+    per-round aggregation sums double contributions in partition order
+    cannot be hash-gated; here each node's incoming mass folds in
+    SOURCE-ID order (sort_array + F.aggregate == DuckDB's ordered
+    list_reduce), the damping epilogue is the fixed chain base +
+    0.85·S, and the graph is symmetric (outdeg ≥ 1 ⇒ no dangling
+    mass), so three unrolled iterations are bit-identical across
+    engines. N and 1/N, 0.15/N are each ONE double division. At 100 TB the shape is q98's: one
     shuffle per iteration, contributions map-side."""
     edges_half = _brand_graph(spark, sf)
     edges = edges_half.select(

@@ -1399,7 +1399,7 @@ def _q_jaccard_auto(spark: SparkSession, sf: str) -> DataFrame:
     the corpus sits below the crossover, so the dispatcher provably
     takes the EXACT path and the plain inverted-index SQL twin
     hash-gates the whole decision stack; the banded branch is
-    race-verified (RACE_BANDING_r10.json) and subset-tested
+    race-verified (history/RACE_BANDING_r10.json) and subset-tested
     (tests/test_round10_ops.py)."""
     from sensor_time_series_pyspark_spark.operators.dispatch import (
         jaccard_pairs_auto,

@@ -1173,9 +1173,8 @@ def _q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     encoding and integer ADC sums, so the per-query shortlist is
     bit-identical across engines and only the final exact-cosine
     re-rank of that fixed shortlist touches floats (the q23/q47
-    epilogue). The KMeans-trained pq_topk_cosine remains the
-    learned-codebook tier with recall pinned in
-    tests/test_similarity.py."""
+    epilogue). Recall against exact top-k is pinned in
+    tests/test_round3c_ops.py."""
     from sensor_time_series_pyspark_spark.operators.similarity import (
         pq_topk_cosine_pivots,
     )

@@ -327,9 +327,9 @@ def _q_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     variant (operators/graph.py:pagerank_fixedpoint — picodecimal
     bigint ranks, damping as *85 div 100, order-insensitive integer
     sums) at a fixed 6 iterations, so the DuckDB twin is the same
-    update mechanically unrolled (_PR_FP_SQL). The float operator
-    (graph.py:pagerank) stays the library surface with its mass-
-    conservation tests; the two agree to ~6e-12 relative."""
+    update mechanically unrolled (_PR_FP_SQL). Its mass-conservation
+    and hub-ranking tests pin the PageRank semantics; the floors stay
+    within ~6e-12 relative of float PageRank."""
     from sensor_time_series_pyspark_spark.operators.graph import (
         pagerank_fixedpoint,
     )

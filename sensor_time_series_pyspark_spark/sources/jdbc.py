@@ -13,7 +13,7 @@ Spark-side PushedFilters on plain table reads, and hash-identical
 results vs the same SQL run directly in DuckDB, on both the
 single-connection and the partitioned range-scan path. The Cassandra
 path stays environment-blocked (no connector jar anywhere in the image
-— probe recorded in PROBES_r08.md).
+— probe recorded in history/PROBES_r08.md).
 """
 
 from __future__ import annotations

@@ -194,7 +194,7 @@ def test_cassandra_connector_probe(spark):
     a clear NotImplementedError naming the missing package instead of
     a deep DataSource lookup failure. If a jar ever appears in a cache
     this test fails, flagging that the live path should be wired up
-    (PROBES_r08.md records the round-8 probe output)."""
+    (history/PROBES_r08.md records the round-8 probe output)."""
     from sensor_time_series_pyspark_spark.sources.jdbc import cassandra_source
 
     home = Path.home()

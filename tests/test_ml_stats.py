@@ -1,5 +1,5 @@
 """ml/stats.py: exact per-dimension stats vs numpy, and the
-pyspark.ml.stat surface (Correlation/Summarizer) vs numpy."""
+pyspark.ml.stat surface (Correlation) vs numpy."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from sensor_time_series_pyspark_spark.ml import (
     correlation_matrix,
     dimension_stats,
-    summarize_vectors,
 )
 from sensor_time_series_pyspark_spark.sources.readers import read_table
 
@@ -48,14 +47,3 @@ def test_correlation_matrix_matches_numpy(spark, emb):
     d = mat.shape[1]
     assert len(out) == d * (d + 1) // 2
     assert all(r["corr"] == pytest.approx(1.0) for r in out if r["i"] == r["j"])
-
-
-def test_summarize_vectors_matches_numpy(spark, emb):
-    df, mat = emb
-    out = {r["dim"]: r for r in summarize_vectors(df, "embedding").collect()}
-    for d in range(mat.shape[1]):
-        col = mat[:, d]
-        assert abs(out[d]["mean"] - col.mean()) < 1e-9
-        assert abs(out[d]["variance"] - col.var(ddof=1)) < 1e-9
-        assert out[d]["min_val"] == pytest.approx(col.min())
-        assert out[d]["max_val"] == pytest.approx(col.max())

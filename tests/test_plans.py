@@ -110,7 +110,7 @@ def test_relational_queries_stay_jvm_side(built):
     # retention), the exchange carries (entity, ts, value) only, and
     # real per-group numeric work amortizes the per-group overhead —
     # measured ≤ seconds in the full-registry screen
-    # (OPTIMIZATION_r10.md).
+    # (history/OPTIMIZATION_r10.md).
     allow_grouped = {
         "q24_holt_forecast",
         "q26_seasonal_decompose",

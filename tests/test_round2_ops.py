@@ -20,12 +20,12 @@ from sensor_time_series_pyspark_spark.operators import (
     hll_rollup,
     m4_downsample,
     merge_intervals,
-    pagerank,
     rolling_corr,
     stratified_hash_sample,
     streaks,
     weighted_median,
 )
+from sensor_time_series_pyspark_spark.operators.graph import pagerank_fixedpoint
 
 
 def ts(s: str) -> datetime:
@@ -164,7 +164,10 @@ def test_pagerank_mass_conserved_and_sink_ranking(spark):
     edges = spark.createDataFrame(
         [(i, 0) for i in range(1, 6)], "src long, dst long"
     )
-    ranks = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=15).collect()}
+    ranks = {
+        r["node"]: r["rank"]
+        for r in pagerank_fixedpoint(edges, n_iter=15).collect()
+    }
     assert abs(sum(ranks.values()) - 6.0) < 1e-6  # mass conserved
     assert all(ranks[0] > ranks[i] for i in range(1, 6))
     spokes = [ranks[i] for i in range(1, 6)]

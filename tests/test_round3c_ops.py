@@ -212,7 +212,7 @@ def test_kcore_cycle_is_2core(spark):
 
 def test_pq_topk_recall_vs_exact(spark):
     from sensor_time_series_pyspark_spark.operators.similarity import (
-        pq_topk_cosine,
+        pq_topk_cosine_pivots,
         topk_cosine,
     )
     from sensor_time_series_pyspark_spark.sources.readers import read_table
@@ -225,33 +225,13 @@ def test_pq_topk_recall_vs_exact(spark):
     }
     approx = {
         (r["qid"], r["cid"])
-        for r in pq_topk_cosine(
+        for r in pq_topk_cosine_pivots(
             emb, q, "vec_id", "vec_id", "embedding",
             k=5, m=16, ks=16, oversample=8,
         ).collect()
     }
     assert len(approx) == len(exact) == 50
     assert len(approx & exact) / len(exact) >= 0.5
-
-
-def test_pq_rerank_scores_are_exact_cosine(spark):
-    # with oversample>1, returned scores are TRUE cosines, so the
-    # self-query must rank itself first with score ~1.0
-    from sensor_time_series_pyspark_spark.operators.similarity import (
-        pq_topk_cosine,
-    )
-    from sensor_time_series_pyspark_spark.sources.readers import read_table
-
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = emb.where(F.col("vec_id") < 3)
-    out = pq_topk_cosine(
-        emb, q, "vec_id", "vec_id", "embedding", k=3, m=16, ks=16, oversample=8
-    )
-    firsts = {r["qid"]: (r["cid"], r["score"]) for r in out.where(
-        F.col("rank") == 1
-    ).collect()}
-    for qid, (cid, score) in firsts.items():
-        assert cid == qid and abs(score - 1.0) < 1e-6
 
 
 # --- Mann-Kendall / Theil-Sen ---------------------------------------------

@@ -13,7 +13,7 @@ from sensor_time_series_pyspark_spark.functions.vectors import cosine_similarity
 from sensor_time_series_pyspark_spark.operators import (
     brp_lsh_join,
     embedding_near_dup_pairs,
-    signed_random_projection,
+    srp_signature_portable,
     topk_cosine,
 )
 from sensor_time_series_pyspark_spark.sources.readers import read_table
@@ -57,7 +57,7 @@ def test_srp_signature_tracks_cosine(spark, emb):
     distance must correlate with angular distance. Check the mean
     normalized hamming of the 20 MOST similar pairs is lower than the
     20 LEAST similar."""
-    sigs = signed_random_projection(emb, "embedding", dim=64, n_bits=64, seed=7)
+    sigs = srp_signature_portable(emb, "embedding", dim=64, n_bits=63, seed=7)
     a = sigs.select(F.col("vec_id").alias("ia"), F.col("srp_sig").alias("sa"),
                     F.col("embedding").alias("va"))
     b = sigs.select(F.col("vec_id").alias("ib"), F.col("srp_sig").alias("sb"),
