@@ -13,6 +13,13 @@ Scale notes:
   and raises ValueError on a different one.
 - the parquet sink partitions by window date so downstream batch reads
   get partition pruning for free.
+- per micro-batch cost on a local session: Spark writes at least five
+  checkpoint files (source log, offsets, commits, one state delta per
+  state partition). ``session.get_spark`` routes them through Spark's
+  FileSystem checkpoint manager (~9 ms per file, against ~35 ms for
+  the default FileContext manager). State deltas and the sink's
+  parquet part files still go through Hadoop's local file system,
+  which runs ``chmod`` as a child process for each file it creates.
 - `availableNow` trigger = batch-sized catch-up runs with streaming
   semantics (checkpoint/exactly-once) — the right way to run the
   "CSV drop" pattern the reference used.
@@ -161,11 +168,15 @@ def write_parquet_stream(
     restarted query REPLAYS the last micro-batch with the same
     ``batch_id``. A blind ``mode("append")`` would duplicate those
     rows. The sink is therefore made idempotent the standard way:
-    every micro-batch lands under a ``_batch_id=N`` partition written
-    with dynamic-partition-overwrite, so a replayed batch overwrites
-    exactly its own partitions and nothing else — replay becomes a
-    no-op, append ∘ replay == append (exactly-once end to end;
-    asserted by the kill/restart tests in test_streaming_recovery.py).
+    micro-batch N is written with a plain ``mode("overwrite")`` into
+    its own ``{path}/_batch_id=N`` directory (partitioned by
+    ``partition_date_col`` inside it), so a replayed batch replaces
+    exactly its own directory and nothing else, even if the replay
+    produces different date partitions — replay becomes a no-op,
+    append ∘ replay == append (exactly-once end to end; asserted by
+    the kill/restart tests in test_streaming_recovery.py). A batch that
+    emits no rows leaves one schema-only part file in its directory
+    (unpartitioned sink), which reads back as zero rows.
 
     The extra partition level costs nothing downstream: date-partition
     pruning works on nested levels, and batch ids are a handy audit
@@ -180,16 +191,10 @@ def write_parquet_stream(
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        part_cols = ["_batch_id"] + (
-            [partition_date_col] if partition_date_col else []
-        )
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
+        writer = batch_df.write.mode("overwrite")
+        if partition_date_col:
+            writer = writer.partitionBy(partition_date_col)
+        writer.parquet(f"{path}/_batch_id={batch_id}")
         if fault_injector is not None:
             fault_injector(batch_id)
 

@@ -48,16 +48,51 @@ def _digest(df):
 
 def test_q25_arima_grid_golden(spark):
     df = _queries()["q25_arima_grid"](spark, SF_001)
-    assert _digest(df) == (150, "515038b5f4c1fc30")
+    assert _digest(df) == (150, "c50a2d0c32f9c0ac")
     rows = {r["user_id"]: r for r in df.collect()}
     # explicit winner + MSE spot pins for the three lowest series ids
     assert rows[0]["best_params"] == '{"p": 1, "d": 0, "q": 0}'
-    assert rows[0]["mse"] == 5694.172132463847
+    assert rows[0]["mse"] == 5694.172132463855
     assert rows[1]["best_params"] == '{"p": 1, "d": 0, "q": 0}'
-    assert rows[1]["mse"] == 809.7642168000283
+    assert rows[1]["mse"] == 809.7642168000285
     assert rows[2]["best_params"] == '{"p": 2, "d": 0, "q": 0}'
     assert rows[2]["mse"] == 1225.3954946180784
 
+
+def test_q25_equals_walk_forward_mse_in_process(spark):
+    """Every q25 row is the grid winner and MSE that
+    ``models.walk_forward_mse`` gives in this process on the same daily
+    series, bit for bit. The digest and MSE pins above hold for one
+    BLAS build on one CPU: ``lstsq`` runs the OpenBLAS kernel chosen for
+    the host, and its last bits may differ elsewhere (two pins frozen
+    on another host read a few ulp apart on a 4-CPU AVX-512 host with
+    numpy 1.26.4). This check holds on any host."""
+    import json
+
+    from sensor_time_series_pyspark_spark.ml.forecast import (
+        _best_combo,
+        _series_values,
+    )
+    from sensor_time_series_pyspark_spark.ml.models import walk_forward_mse
+    from sensor_time_series_pyspark_spark.queries.core import _daily_series
+
+    grid = [
+        {"p": 1, "d": 0, "q": 0},
+        {"p": 1, "d": 1, "q": 0},
+        {"p": 2, "d": 0, "q": 0},
+        {"p": 0, "d": 1, "q": 1},
+    ]
+    got = {
+        r["user_id"]: (r["best_params"], r["mse"])
+        for r in _queries()["q25_arima_grid"](spark, SF_001).collect()
+    }
+    want = {}
+    for uid, pdf in _daily_series(spark, SF_001).toPandas().groupby("user_id"):
+        x = _series_values(pdf, "day", "value")
+        mses = [walk_forward_mse(x, "arima", g) for g in grid]
+        best = _best_combo(mses)
+        want[uid] = (json.dumps(grid[best]), mses[best])
+    assert got == want
 
 def test_q121_mllib_corr_golden(spark):
     assert _digest(_queries()["q121_mllib_corr"](spark, SF_001)) == (
